@@ -184,14 +184,32 @@ def _analyze(x: np.ndarray) -> np.ndarray:
     return out
 
 
+_BLOCK = 16  # granules per fixed-shape synthesis product
+
+
 def _synthesize(s: np.ndarray) -> np.ndarray:
-    """Subband samples S[32, m] -> PCM overlap-add (length 32·m+512)."""
+    """Subband samples S[32, m] -> PCM overlap-add (length 32·m+512).
+
+    The filterbank product runs in fixed-shape blocks of _BLOCK
+    granules aligned to the stream start (the last block zero-padded).
+    One (512, m) GEMM would let multithreaded BLAS pick a reduction
+    order that depends on the stream length m, and a stream's leading
+    frames would then not decode bit-identically to those frames
+    alone. The overlap-add sums each sample's granules in ascending
+    order."""
     n_gran = s.shape[1]
-    y = np.zeros(n_gran * _BANDS + _TAPS, dtype=np.float64)
-    contrib = _BANK.T @ s  # (512, m)
-    for m in range(n_gran):
-        y[m * _BANDS : m * _BANDS + _TAPS] += contrib[:, m]
-    return y
+    n_blk = -(-n_gran // _BLOCK)
+    padded = np.zeros((n_blk * _BLOCK, _BANDS))
+    padded[:n_gran] = s.T
+    blocks = padded.reshape(n_blk, _BLOCK, _BANDS).transpose(0, 2, 1)
+    contrib = np.matmul(_BANK.T, blocks)  # (n_blk, 512, _BLOCK)
+    contrib = contrib.transpose(0, 2, 1).reshape(-1, _TAPS)[:n_gran]
+    span = _TAPS // _BANDS  # granules overlapping one output sample
+    parts = contrib.reshape(n_gran, span, _BANDS)
+    y = np.zeros((n_gran + span, _BANDS))
+    for j in reversed(range(span)):
+        y[j : j + n_gran] += parts[:, j]
+    return y.reshape(-1)
 
 
 def _calibrate() -> float:

@@ -147,7 +147,8 @@ def extract_pdf_text(data: bytes) -> str:
         return structured
     lines: list[str] = []
     for raw in _STREAM_RE.findall(data):
-        raw = raw.rstrip(b"\r\n")
+        # inflate unstripped: a deflate stream may itself end in CR/LF
+        # bytes, and zlib ignores the EOL that follows its end marker
         try:
             content = zlib.decompress(raw)
         except zlib.error:
@@ -399,7 +400,7 @@ def _scan_objects(data: bytes) -> dict:
                     e = data.find(b"endstream", j)
                     if e < 0:
                         continue
-                    stream = data[j:e].rstrip(b"\r\n")
+                    stream = data[j:e]  # trailing EOL: see above
         objs[(num, gen)] = (val, stream)
     # expand object streams (compressed non-stream objects).
     # Collision policy without an xref (r15 review, r16 candidate

@@ -41,6 +41,34 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
+def doc_map(df: DataFrame, schema: T.StructType, row) -> DataFrame:
+    """The per-document Arrow map: ``row(*values)`` is called once per
+    input row, with the values in ``df.columns`` order, and returns one
+    tuple in ``schema`` order. The batch loop is written here once; a
+    map whose per-partition state is expensive, or whose batch emits
+    other than one row per input row, keeps its own ``mapInPandas``."""
+    names = schema.fieldNames()
+
+    def doc_rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            cols = [pdf[c] for c in pdf.columns]
+            yield pd.DataFrame([row(*v) for v in zip(*cols)], columns=names)
+
+    return df.mapInPandas(doc_rows, schema)
+
+
+def by_doc(df: DataFrame) -> DataFrame:
+    """Sort a map's per-doc output by ``doc_id`` behind a
+    ``hashpartitioning(doc_id)`` shuffle barrier. ``orderBy`` first
+    runs a range-sampling job over its input; without the barrier that
+    job re-runs the Python map, so the map would run twice. With it,
+    the sampling job reads the barrier's shuffle files and the map runs
+    once (r16). Only the map's small output rows are shuffled.
+
+    Use as ``df.transform(by_doc)``."""
+    return df.repartition("doc_id").orderBy("doc_id")
+
+
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Model a multimodal table: payload as ``binary`` + typed metadata
     struct (the engine's analog of the reference's metadata triple,

@@ -182,6 +182,9 @@ def spread_input(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     declared query's output (all are aggregations or explicitly
     ordered; parity is hash-checked on sorted rows).
 
+    A remote table (``s3a://``, ``hdfs://``) is not sized here; its
+    size counts as unknown and the frame is returned unchanged.
+
     Use as ``df.transform(spread_input, sf_dir, "documents")``.
     """
     spark = df.sparkSession
@@ -189,7 +192,10 @@ def spread_input(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     max_split = _conf_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    if _path_bytes(os.path.join(sf_dir, f"{name}.parquet")) >= n * max_split:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if "://" in path and not path.startswith("file:"):
+        return df  # remote store: size unknown, trust its own splits
+    if _path_bytes(path) >= n * max_split:
         return df
     return df.repartition(n)
 

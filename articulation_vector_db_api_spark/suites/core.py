@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 from ..functions.chunking import chunk_documents, chunk_sql_duckdb
 from ..functions.embedding import embedding_sql_duckdb, hash_embedding_from_hex
 from ..functions.vector import dot_sql_duckdb
+from ..operators.multimodal import by_doc, doc_map
 from ..operators.search import (
     assemble_context,
     build_chunk_index,
@@ -2450,9 +2451,6 @@ def ingest_office_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc, no shuffle of document bytes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2466,7 +2464,7 @@ def ingest_office_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
 
         from ..functions.officetext import (
@@ -2478,37 +2476,26 @@ def ingest_office_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from ..operators.ingest import _extract_one
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                text = str(text)
-                paras = text.split("\n")
-                got_docx, err = _extract_one(
-                    f"{int(doc_id)}.docx", build_docx(paras)
-                )
-                got_odt = extract_odt_text(build_odt(paras))
-                got_pptx = extract_pptx_text(build_pptx([paras]))
-                rows.append(
-                    (
-                        doc_id,
-                        int(err is None and got_docx == text),
-                        int(got_odt == text),
-                        int(got_pptx == text),
-                        len(text),
-                        hashlib.sha256(
-                            (got_docx or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        text = str(text)
+        paras = text.split("\n")
+        got_docx, err = _extract_one(f"{int(doc_id)}.docx", build_docx(paras))
+        got_odt = extract_odt_text(build_odt(paras))
+        got_pptx = extract_pptx_text(build_pptx([paras]))
+        return (
+            doc_id,
+            int(err is None and got_docx == text),
+            int(got_odt == text),
+            int(got_pptx == text),
+            len(text),
+            hashlib.sha256((got_docx or "").encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -2539,9 +2526,6 @@ def ingest_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc, no shuffle of document bytes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2555,7 +2539,7 @@ def ingest_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
         import io
         import zipfile
@@ -2563,55 +2547,42 @@ def ingest_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..functions.epub import build_epub, extract_epub_text
         from ..operators.ingest import _extract_one
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                text = str(text)
-                lines = text.split("\n")
-                got, err = _extract_one(
-                    f"{int(doc_id)}.epub", build_epub([lines])
-                )
-                # two-chapter split; single-line docs get a witness
-                # appendix chapter so the spine walk is still 2-deep
-                if len(lines) >= 2:
-                    mid = len(lines) // 2
-                    ch2 = lines[mid:]
-                else:
-                    mid = len(lines)
-                    ch2 = ["appendix"]
-                two = extract_epub_text(
-                    build_epub([lines[:mid], ch2])
-                )
-                expect_two = (
-                    "\n".join(lines[:mid]) + "\n\n" + "\n".join(ch2)
-                )
-                with zipfile.ZipFile(
-                    io.BytesIO(build_epub([lines]))
-                ) as z:
-                    info = z.infolist()[0]
-                    mt_first = int(
-                        info.filename == "mimetype"
-                        and info.compress_type == zipfile.ZIP_STORED
-                    )
-                rows.append(
-                    (
-                        doc_id,
-                        int(err is None and got == text),
-                        int(two == expect_two),
-                        mt_first,
-                        len(text),
-                        hashlib.sha256((got or "").encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        text = str(text)
+        lines = text.split("\n")
+        got, err = _extract_one(f"{int(doc_id)}.epub", build_epub([lines]))
+        # two-chapter split; single-line docs get a witness
+        # appendix chapter so the spine walk is still 2-deep
+        if len(lines) >= 2:
+            mid = len(lines) // 2
+            ch2 = lines[mid:]
+        else:
+            mid = len(lines)
+            ch2 = ["appendix"]
+        two = extract_epub_text(build_epub([lines[:mid], ch2]))
+        expect_two = "\n".join(lines[:mid]) + "\n\n" + "\n".join(ch2)
+        with zipfile.ZipFile(
+            io.BytesIO(build_epub([lines]))
+        ) as z:
+            info = z.infolist()[0]
+            mt_first = int(
+                info.filename == "mimetype"
+                and info.compress_type == zipfile.ZIP_STORED
+            )
+        return (
+            doc_id,
+            int(err is None and got == text),
+            int(two == expect_two),
+            mt_first,
+            len(text),
+            hashlib.sha256((got or "").encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -2644,9 +2615,6 @@ def ingest_mail_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc, no shuffle of document bytes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2662,7 +2630,7 @@ def ingest_mail_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
 
         from ..functions.mailtext import (
@@ -2672,63 +2640,53 @@ def ingest_mail_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             extract_mbox_text,
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                multi = i % 2 == 1
-                raw = build_eml(
-                    f"doc {i}",
-                    text,
-                    html_alternative=(
-                        "<p>decoy html body</p>" if multi else None
-                    ),
-                )
-                m = extract_eml(raw)
-                got = m["text"]
-                # MIME canonicalizes the body to end with a newline
-                recon = (
-                    got if text.endswith("\n") else got[: -1]
-                ) if got.endswith("\n") else got
-                lines = text.split("\n")
-                mid = max(1, len(lines) // 2)
-                mbox = build_mbox(
-                    [
-                        build_eml(f"part 1 of {i}", "\n".join(lines[:mid])),
-                        build_eml(f"part 2 of {i}", "\n".join(lines[mid:])),
-                    ]
-                )
-                both = extract_mbox_text(mbox)
-                mbox_ok = int(
-                    both.count("Subject: part ") == 2
-                    and "\n".join(lines[:mid]).rstrip("\n") in both
-                    and "\n".join(lines[mid:]).rstrip("\n") in both
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        int(recon == text),
-                        int(multi),
-                        int(
-                            m["body_source"] == "plain"
-                            and "decoy" not in got
-                        ),
-                        2,
-                        mbox_ok,
-                        len(text),
-                        hashlib.sha256(recon.encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        text = str(text)
+        multi = i % 2 == 1
+        raw = build_eml(
+            f"doc {i}",
+            text,
+            html_alternative=(
+                "<p>decoy html body</p>" if multi else None
+            ),
+        )
+        m = extract_eml(raw)
+        got = m["text"]
+        # MIME canonicalizes the body to end with a newline
+        recon = (
+            got if text.endswith("\n") else got[: -1]
+        ) if got.endswith("\n") else got
+        lines = text.split("\n")
+        mid = max(1, len(lines) // 2)
+        mbox = build_mbox(
+            [
+                build_eml(f"part 1 of {i}", "\n".join(lines[:mid])),
+                build_eml(f"part 2 of {i}", "\n".join(lines[mid:])),
+            ]
+        )
+        both = extract_mbox_text(mbox)
+        mbox_ok = int(
+            both.count("Subject: part ") == 2
+            and "\n".join(lines[:mid]).rstrip("\n") in both
+            and "\n".join(lines[mid:]).rstrip("\n") in both
+        )
+        return (
+            doc_id,
+            int(recon == text),
+            int(multi),
+            int(m["body_source"] == "plain" and "decoy" not in got),
+            2,
+            mbox_ok,
+            len(text),
+            hashlib.sha256(recon.encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -2765,9 +2723,6 @@ def ingest_archive_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc; member bytes never leave the partition."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2784,7 +2739,7 @@ def ingest_archive_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
         import io
         import tarfile
@@ -2794,68 +2749,55 @@ def ingest_archive_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..functions.officetext import build_docx
         from ..operators.ingest import _explode_one, _extract_one
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                members = [
-                    ("doc.txt", text.encode()),
-                    ("doc.docx", build_docx(text.split("\n"))),
-                    ("doc.eml", build_eml(f"doc {i}", text)),
-                ]
-                buf = io.BytesIO()
-                # witness-construction cost only: the archive is the
-                # query's INPUT; level 1 halves the zlib time and no
-                # output column depends on the compressed bytes
-                with tarfile.open(
-                    fileobj=buf, mode="w:gz", compresslevel=1
-                ) as tf:
-                    for name, data in members:
-                        info = tarfile.TarInfo(name)
-                        info.size = len(data)
-                        tf.addfile(info, io.BytesIO(data))
-                exploded = _explode_one(f"{i}.tar.gz", buf.getvalue())
-                got = {}
-                for _p, member, content, err in exploded:
-                    assert err is None
-                    got[member], _e = _extract_one(member, content)
-                zb = io.BytesIO()
-                with zipfile.ZipFile(zb, "w") as z:
-                    z.writestr("only.txt", text)
-                zrows = _explode_one(f"{i}.zip", zb.getvalue())
-                bad = _explode_one(f"{i}.tar.gz", b"\x1f\x8b garbage")
-                eml_text = got.get("doc.eml", "")
-                eml_body = eml_text.split("\n\n", 1)[1] if "\n\n" in eml_text else ""
-                eml_ok = eml_body == text or eml_body == text + "\n"
-                rows.append(
-                    (
-                        doc_id,
-                        len(exploded),
-                        int(got.get("doc.txt") == text),
-                        int(got.get("doc.docx") == text),
-                        int(eml_ok),
-                        len(zrows),
-                        int(
-                            len(bad) == 1
-                            and bad[0][3] is not None
-                            and bad[0][2] is None
-                        ),
-                        len(text),
-                        hashlib.sha256(
-                            (got.get("doc.txt") or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        text = str(text)
+        members = [
+            ("doc.txt", text.encode()),
+            ("doc.docx", build_docx(text.split("\n"))),
+            ("doc.eml", build_eml(f"doc {i}", text)),
+        ]
+        buf = io.BytesIO()
+        # witness-construction cost only: the archive is the
+        # query's INPUT; level 1 halves the zlib time and no
+        # output column depends on the compressed bytes
+        with tarfile.open(
+            fileobj=buf, mode="w:gz", compresslevel=1
+        ) as tf:
+            for name, data in members:
+                info = tarfile.TarInfo(name)
+                info.size = len(data)
+                tf.addfile(info, io.BytesIO(data))
+        exploded = _explode_one(f"{i}.tar.gz", buf.getvalue())
+        got = {}
+        for _p, member, content, err in exploded:
+            assert err is None
+            got[member], _e = _extract_one(member, content)
+        zb = io.BytesIO()
+        with zipfile.ZipFile(zb, "w") as z:
+            z.writestr("only.txt", text)
+        zrows = _explode_one(f"{i}.zip", zb.getvalue())
+        bad = _explode_one(f"{i}.tar.gz", b"\x1f\x8b garbage")
+        eml_text = got.get("doc.eml", "")
+        eml_body = eml_text.split("\n\n", 1)[1] if "\n\n" in eml_text else ""
+        eml_ok = eml_body == text or eml_body == text + "\n"
+        return (
+            doc_id,
+            len(exploded),
+            int(got.get("doc.txt") == text),
+            int(got.get("doc.docx") == text),
+            int(eml_ok),
+            len(zrows),
+            int(len(bad) == 1 and bad[0][3] is not None and bad[0][2] is None),
+            len(text),
+            hashlib.sha256((got.get("doc.txt") or "").encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -2893,9 +2835,6 @@ def ingest_rtf_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2911,7 +2850,7 @@ def ingest_rtf_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
 
         from ..functions.htmltext import extract_main_text
@@ -2919,60 +2858,44 @@ def ingest_rtf_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..functions.rtftext import build_rtf
         from ..operators.ingest import _extract_one
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                lines = text.split("\n")
-                rtf = build_rtf(lines)
-                got_rtf, err = _extract_one(f"{i}.rtf", rtf)
-                # splice destination groups real writers emit
-                dirty = rtf.replace(
-                    b"\\uc1",
-                    b"\\uc1{\\*\\generator SECRETGEN}"
-                    b"{\\info{\\title SECRETTITLE}}",
-                    1,
-                )
-                got_dirty, _e = _extract_one(f"{i}d.rtf", dirty)
-                body = "".join(
-                    f"<p>{_xml_escape(ln)}</p>" for ln in lines
-                )
-                html = (
-                    f"<html><head><title>doc {i}</title></head>"
-                    f"<body>{body}</body></html>"
-                )
-                out = extract_main_text(html)
-                got_html, _e2 = _extract_one(f"{i}.html", html.encode())
-                norm = "\n".join(
-                    " ".join(ln.split()) for ln in lines if ln.split()
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        int(err is None and got_rtf == text),
-                        int(
-                            got_dirty == text
-                            and "SECRET" not in (got_dirty or "")
-                        ),
-                        int(out["text"] == norm and got_html == norm),
-                        int(out["title"] == f"doc {i}"),
-                        out["n_paragraphs"],
-                        len(text),
-                        hashlib.sha256(
-                            (got_rtf or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        text = str(text)
+        lines = text.split("\n")
+        rtf = build_rtf(lines)
+        got_rtf, err = _extract_one(f"{i}.rtf", rtf)
+        # splice destination groups real writers emit
+        dirty = rtf.replace(
+            b"\\uc1",
+            b"\\uc1{\\*\\generator SECRETGEN}"
+            b"{\\info{\\title SECRETTITLE}}",
+            1,
+        )
+        got_dirty, _e = _extract_one(f"{i}d.rtf", dirty)
+        body = "".join(f"<p>{_xml_escape(ln)}</p>" for ln in lines)
+        html = (
+            f"<html><head><title>doc {i}</title></head>"
+            f"<body>{body}</body></html>"
+        )
+        out = extract_main_text(html)
+        got_html, _e2 = _extract_one(f"{i}.html", html.encode())
+        norm = "\n".join(" ".join(ln.split()) for ln in lines if ln.split())
+        return (
+            doc_id,
+            int(err is None and got_rtf == text),
+            int(got_dirty == text and "SECRET" not in (got_dirty or "")),
+            int(out["text"] == norm and got_html == norm),
+            int(out["title"] == f"doc {i}"),
+            out["n_paragraphs"],
+            len(text),
+            hashlib.sha256((got_rtf or "").encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -3018,9 +2941,6 @@ def pipeline_document_corpus_ingest(
 
     Scale shape: Arrow-batched narrow map; archive/message bytes
     never shuffle — only the ledger row leaves the task."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -3033,7 +2953,7 @@ def pipeline_document_corpus_ingest(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import io
         import tarfile
 
@@ -3048,131 +2968,97 @@ def pipeline_document_corpus_ingest(
         from ..functions.rtftext import build_rtf
         from ..operators.ingest import _explode_one, _extract_one
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                kind = i % 4
-                text = str(text)
-                lines = text.split("\n")
-                ok = 0
-                units = 0
-                try:
-                    if kind == 0:
-                        mid = max(1, len(lines) // 2)
-                        h1, h2 = (
-                            "\n".join(lines[:mid]),
-                            "\n".join(lines[mid:]),
-                        )
-                        msgs = split_mbox(
-                            build_mbox(
-                                [
-                                    build_eml("p1", h1),
-                                    build_eml("p2", h2),
-                                ]
-                            )
-                        )
-                        units = len(msgs)
-                        bodies = [
-                            extract_eml(m)["text"].rstrip("\n")
-                            for m in msgs
-                        ]
-                        ok = int(
-                            bodies == [h1.rstrip("\n"), h2.rstrip("\n")]
-                        )
-                    elif kind == 1:
-                        mid = max(1, len(lines) // 2)
-                        ch2 = lines[mid:] or ["appendix"]
-                        blob = build_epub([lines[:mid], ch2])
-                        got = extract_epub_text(blob)
-                        units = 2  # chapters BUILT — not re-derived
-                        # from separator counts, which a blank line
-                        # inside the text would inflate (r14 review)
-                        ok = int(
-                            got
-                            == "\n".join(lines[:mid]) + "\n\n"
-                            + "\n".join(ch2)
-                        )
-                    elif kind == 2:
-                        html_body = "".join(
-                            f"<p>{_xml_escape(ln)}</p>" for ln in lines
-                        )
-                        members = [
-                            ("doc.txt", text.encode()),
-                            ("doc.rtf", build_rtf(lines)),
-                            (
-                                "doc.html",
-                                f"<html><body>{html_body}"
-                                "</body></html>".encode(),
-                            ),
-                        ]
-                        buf = io.BytesIO()
-                        with tarfile.open(
-                            fileobj=buf, mode="w:gz"
-                        ) as tf:
-                            for name, data in members:
-                                info = tarfile.TarInfo(name)
-                                info.size = len(data)
-                                tf.addfile(info, io.BytesIO(data))
-                        exploded = _explode_one(
-                            f"{i}.tar.gz", buf.getvalue()
-                        )
-                        units = len(exploded)
-                        norm = "\n".join(
-                            " ".join(ln.split())
-                            for ln in lines
-                            if ln.split()
-                        )
-                        want = {
-                            "doc.txt": text,
-                            "doc.rtf": text,
-                            "doc.html": norm,
-                        }
-                        ok = int(
-                            all(e[3] is None for e in exploded)
-                            and all(
-                                _extract_one(m, c)[0] == want[m]
-                                for _p, m, c, _e in exploded
-                            )
-                        )
-                    else:
-                        raw = build_eml(
-                            f"doc {i}", text,
-                            html_alternative="<p>decoy</p>",
-                        )
-                        m = extract_eml(raw)
-                        units = 1
-                        got = m["text"]
-                        recon = (
-                            got[:-1]
-                            if got.endswith("\n")
-                            and not text.endswith("\n")
-                            else got
-                        )
-                        ok = int(
-                            recon == text
-                            and m["body_source"] == "plain"
-                        )
-                except (ValueError, NotImplementedError):
-                    ok = 0
-                rows.append(
+        i = int(doc_id)
+        kind = i % 4
+        text = str(text)
+        lines = text.split("\n")
+        ok = 0
+        units = 0
+        try:
+            if kind == 0:
+                mid = max(1, len(lines) // 2)
+                h1, h2 = ("\n".join(lines[:mid]), "\n".join(lines[mid:]))
+                msgs = split_mbox(
+                    build_mbox([build_eml("p1", h1), build_eml("p2", h2)])
+                )
+                units = len(msgs)
+                bodies = [extract_eml(m)["text"].rstrip("\n") for m in msgs]
+                ok = int(bodies == [h1.rstrip("\n"), h2.rstrip("\n")])
+            elif kind == 1:
+                mid = max(1, len(lines) // 2)
+                ch2 = lines[mid:] or ["appendix"]
+                blob = build_epub([lines[:mid], ch2])
+                got = extract_epub_text(blob)
+                units = 2  # chapters BUILT — not re-derived
+                # from separator counts, which a blank line
+                # inside the text would inflate (r14 review)
+                ok = int(
+                    got == "\n".join(lines[:mid]) + "\n\n" + "\n".join(ch2)
+                )
+            elif kind == 2:
+                html_body = "".join(
+                    f"<p>{_xml_escape(ln)}</p>" for ln in lines
+                )
+                members = [
+                    ("doc.txt", text.encode()),
+                    ("doc.rtf", build_rtf(lines)),
                     (
-                        doc_id,
-                        ("mbox", "epub", "archive", "eml")[kind],
-                        units,
-                        ok,
-                        int(ok == 1),
+                        "doc.html",
+                        f"<html><body>{html_body}"
+                        "</body></html>".encode(),
+                    ),
+                ]
+                buf = io.BytesIO()
+                with tarfile.open(
+                    fileobj=buf, mode="w:gz"
+                ) as tf:
+                    for name, data in members:
+                        info = tarfile.TarInfo(name)
+                        info.size = len(data)
+                        tf.addfile(info, io.BytesIO(data))
+                exploded = _explode_one(f"{i}.tar.gz", buf.getvalue())
+                units = len(exploded)
+                norm = "\n".join(
+                    " ".join(ln.split()) for ln in lines if ln.split()
+                )
+                want = {"doc.txt": text, "doc.rtf": text, "doc.html": norm}
+                ok = int(
+                    all(e[3] is None for e in exploded)
+                    and all(
+                        _extract_one(m, c)[0] == want[m]
+                        for _p, m, c, _e in exploded
                     )
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            else:
+                raw = build_eml(
+                    f"doc {i}", text, html_alternative="<p>decoy</p>"
+                )
+                m = extract_eml(raw)
+                units = 1
+                got = m["text"]
+                recon = (
+                    got[:-1]
+                    if got.endswith("\n")
+                    and not text.endswith("\n")
+                    else got
+                )
+                ok = int(recon == text and m["body_source"] == "plain")
+        except (ValueError, NotImplementedError):
+            ok = 0
+        return (
+            doc_id,
+            ("mbox", "epub", "archive", "eml")[kind],
+            units,
+            ok,
+            int(ok == 1),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -3225,9 +3111,6 @@ def scan_zstd_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: Arrow-batched narrow map over (doc_id, text) — one
     row per doc, compressed bytes never leave the partition, no
     shuffle. At a real 100 TB crawl only the DECODE side runs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -3243,7 +3126,7 @@ def scan_zstd_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
         import io
         import json
@@ -3259,94 +3142,74 @@ def scan_zstd_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         def ref_compress(data: bytes) -> bytes:
             return codec.compress(data).to_pybytes()
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                # 1. .jsonl.zst member, reference-encoded (character
-                # midpoint split — JSON escapes any newlines, so the
-                # records reassemble by plain concatenation)
-                mid = len(text) // 2
-                recs = [
-                    {"id": i, "part": 0, "text": text[:mid]},
-                    {"id": i, "part": 1, "text": text[mid:]},
-                ]
-                jsonl = "\n".join(
-                    json.dumps(r, ensure_ascii=False) for r in recs
-                ).encode()
-                decoded = decompress_zstd(ref_compress(jsonl))
-                parsed = [
-                    json.loads(ln)
-                    for ln in decoded.decode().split("\n")
-                ]
-                recon = "".join(p["text"] for p in parsed)
-                jsonl_ok = int(decoded == jsonl and recon == text)
-                # 2. multi-frame + skippable concatenation
-                skip = (
-                    (0x184D2A50).to_bytes(4, "little")
-                    + (4).to_bytes(4, "little")
-                    + b"meta"
-                )
-                two = (
-                    ref_compress(text[: len(text) // 2].encode())
-                    + skip
-                    + build_zstd_frames(text[len(text) // 2 :].encode())
-                )
-                multi_ok = int(decompress_zstd(two) == text.encode())
-                # 3. dispatch: .txt.zst through _extract_one
-                got, err = _extract_one(
-                    f"{i}.txt.zst", ref_compress(text.encode())
-                )
-                disp_ok = int(err is None and got == text)
-                # 4. .tar.zst through the archive exploder
-                buf = io.BytesIO()
-                with tarfile.open(fileobj=buf, mode="w:") as tf:
-                    for name, data in (
-                        ("a.txt", text.encode()),
-                        ("b.jsonl", jsonl),
-                    ):
-                        info = tarfile.TarInfo(name)
-                        info.size = len(data)
-                        tf.addfile(info, io.BytesIO(data))
-                tarzst = ref_compress(buf.getvalue())
-                members = _explode_one(f"{i}.tar.zst", tarzst)
-                tar_ok = (
-                    len(members)
-                    if all(m[3] is None for m in members)
-                    else -1
-                )
-                # 5. corrupt frame isolates as an error row — a
-                # TRUNCATED frame is the deterministic corruption
-                # (the declared content size can never be met; a
-                # mid-frame bit flip could legally decode to altered
-                # bytes on a checksum-less frame)
-                bad = ref_compress(text.encode())[:-3]
-                _g, berr = _extract_one(f"{i}.txt.zst", bytes(bad))
-                bad_ok = int(_g is None and berr is not None)
-                rows.append(
-                    (
-                        doc_id,
-                        jsonl_ok,
-                        multi_ok,
-                        disp_ok,
-                        tar_ok,
-                        bad_ok,
-                        len(text),
-                        hashlib.sha256(
-                            (got or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        text = str(text)
+        # 1. .jsonl.zst member, reference-encoded (character
+        # midpoint split — JSON escapes any newlines, so the
+        # records reassemble by plain concatenation)
+        mid = len(text) // 2
+        recs = [
+            {"id": i, "part": 0, "text": text[:mid]},
+            {"id": i, "part": 1, "text": text[mid:]},
+        ]
+        jsonl = "\n".join(
+            json.dumps(r, ensure_ascii=False) for r in recs
+        ).encode()
+        decoded = decompress_zstd(ref_compress(jsonl))
+        parsed = [json.loads(ln) for ln in decoded.decode().split("\n")]
+        recon = "".join(p["text"] for p in parsed)
+        jsonl_ok = int(decoded == jsonl and recon == text)
+        # 2. multi-frame + skippable concatenation
+        skip = (
+            (0x184D2A50).to_bytes(4, "little") + (4).to_bytes(4, "little")
+            + b"meta"
+        )
+        two = (
+            ref_compress(text[: len(text) // 2].encode()) + skip
+            + build_zstd_frames(text[len(text) // 2 :].encode())
+        )
+        multi_ok = int(decompress_zstd(two) == text.encode())
+        # 3. dispatch: .txt.zst through _extract_one
+        got, err = _extract_one(f"{i}.txt.zst", ref_compress(text.encode()))
+        disp_ok = int(err is None and got == text)
+        # 4. .tar.zst through the archive exploder
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w:") as tf:
+            for name, data in (
+                ("a.txt", text.encode()),
+                ("b.jsonl", jsonl),
+            ):
+                info = tarfile.TarInfo(name)
+                info.size = len(data)
+                tf.addfile(info, io.BytesIO(data))
+        tarzst = ref_compress(buf.getvalue())
+        members = _explode_one(f"{i}.tar.zst", tarzst)
+        tar_ok = len(members) if all(m[3] is None for m in members) else -1
+        # 5. corrupt frame isolates as an error row — a
+        # TRUNCATED frame is the deterministic corruption
+        # (the declared content size can never be met; a
+        # mid-frame bit flip could legally decode to altered
+        # bytes on a checksum-less frame)
+        bad = ref_compress(text.encode())[:-3]
+        _g, berr = _extract_one(f"{i}.txt.zst", bytes(bad))
+        bad_ok = int(_g is None and berr is not None)
+        return (
+            doc_id,
+            jsonl_ok,
+            multi_ok,
+            disp_ok,
+            tar_ok,
+            bad_ok,
+            len(text),
+            hashlib.sha256((got or "").encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -3389,9 +3252,6 @@ def ingest_pdf_type0_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc; PDF bytes never leave the partition."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -3405,69 +3265,54 @@ def ingest_pdf_type0_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
+        import zlib
 
         from ..functions import pdftext as P
         from ..operators.ingest import _extract_one
 
-        for pdf_batch in it:
-            rows = []
-            for doc_id, text in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-                i = int(doc_id)
-                text = str(text)
-                paras = [
-                    ln.strip(" \t\r") for ln in text.split("\n")
-                ]
-                paras = [p for p in paras if p]
-                norm = "\n".join(paras)
-                pdf = P.build_type0_pdf(paras or ["empty"])
-                got, err = _extract_one(f"{i}.pdf", pdf)
-                lossless = int(
-                    err is None and got == (norm or "empty")
-                )
-                # no-ToUnicode variant -> the honest gate yields
-                # empty text (glyphs skipped, as pypdf does)
-                blank = P.build_type0_pdf(
-                    paras or ["empty"], to_unicode=False
-                )
-                gated, _e2 = _extract_one(f"{i}g.pdf", blank)
-                via_cmap = int((gated or "") == "")
-                # the legacy scrape alone cannot decode the witness
-                # (exact tier-1 loop, incl. its skip-on-inflate-error
-                # stance — a regex-cut stream must not crash the row)
-                import zlib as _zlib
-
-                legacy_lines: list[str] = []
-                for raw in P._STREAM_RE.findall(pdf):
-                    raw = raw.rstrip(b"\r\n")
-                    try:
-                        c = _zlib.decompress(raw)
-                    except _zlib.error:
-                        c = raw
-                    if b"BT" in c:
-                        legacy_lines.extend(P._text_from_content(c))
-                legacy = "\n".join(legacy_lines)
-                legacy_declines = int(norm not in legacy or norm == "")
-                rows.append(
-                    (
-                        doc_id,
-                        lossless,
-                        via_cmap,
-                        legacy_declines,
-                        len(norm),
-                        hashlib.sha256(norm.encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        text = str(text)
+        paras = [ln.strip(" \t\r") for ln in text.split("\n")]
+        paras = [p for p in paras if p]
+        norm = "\n".join(paras)
+        pdf = P.build_type0_pdf(paras or ["empty"])
+        got, err = _extract_one(f"{i}.pdf", pdf)
+        lossless = int(err is None and got == (norm or "empty"))
+        # no-ToUnicode variant -> the honest gate yields
+        # empty text (glyphs skipped, as pypdf does)
+        blank = P.build_type0_pdf(paras or ["empty"], to_unicode=False)
+        gated, _e2 = _extract_one(f"{i}g.pdf", blank)
+        via_cmap = int((gated or "") == "")
+        # the legacy scrape alone cannot decode the witness
+        # (exact tier-1 loop, incl. its skip-on-inflate-error
+        # stance — a regex-cut stream must not crash the row)
+        legacy_lines: list[str] = []
+        for raw in P._STREAM_RE.findall(pdf):
+            try:
+                c = zlib.decompress(raw)
+            except zlib.error:
+                c = raw
+            if b"BT" in c:
+                legacy_lines.extend(P._text_from_content(c))
+        legacy = "\n".join(legacy_lines)
+        legacy_declines = int(norm not in legacy or norm == "")
+        return (
+            doc_id,
+            lossless,
+            via_cmap,
+            legacy_declines,
+            len(norm),
+            hashlib.sha256(norm.encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )
 
 
@@ -3504,9 +3349,6 @@ def ingest_sevenz_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow-batched narrow map over (doc_id, text), one
     row per doc; member bytes never leave the partition."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -3522,67 +3364,52 @@ def ingest_sevenz_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
 
         from ..functions.rtftext import build_rtf
         from ..functions.sevenzip import build_7z
         from ..operators.ingest import _explode_one, _extract_one
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                members = [
-                    ("doc.txt", text.encode()),
-                    ("doc.rtf", build_rtf(text.split("\n"))),
-                ]
-                arc = build_7z(members, compress=True)
-                exploded = _explode_one(f"{i}.7z", arc)
-                got = {}
-                for _p, member, content, err in exploded:
-                    assert err is None, err
-                    got[member], _e = _extract_one(member, content)
-                txt_ok = int(got.get("doc.txt") == text)
-                rtf_ok = int(got.get("doc.rtf") == text)
-                store = _explode_one(
-                    f"{i}s.7z", build_7z(members, compress=False)
-                )
-                store_ok = int(
-                    len(store) == 2
-                    and store[0][2] == text.encode()
-                    and all(r[3] is None for r in store)
-                )
-                bad = _explode_one(
-                    f"{i}b.7z", b"7z\xbc\xaf\x27\x1cgarbage"
-                )
-                bad_ok = int(
-                    len(bad) == 1
-                    and bad[0][3] is not None
-                    and bad[0][2] is None
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        len(exploded),
-                        txt_ok,
-                        rtf_ok,
-                        store_ok,
-                        bad_ok,
-                        len(text),
-                        hashlib.sha256(
-                            (got.get("doc.txt") or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        text = str(text)
+        members = [
+            ("doc.txt", text.encode()),
+            ("doc.rtf", build_rtf(text.split("\n"))),
+        ]
+        arc = build_7z(members, compress=True)
+        exploded = _explode_one(f"{i}.7z", arc)
+        got = {}
+        for _p, member, content, err in exploded:
+            assert err is None, err
+            got[member], _e = _extract_one(member, content)
+        txt_ok = int(got.get("doc.txt") == text)
+        rtf_ok = int(got.get("doc.rtf") == text)
+        store = _explode_one(f"{i}s.7z", build_7z(members, compress=False))
+        store_ok = int(
+            len(store) == 2
+            and store[0][2] == text.encode()
+            and all(r[3] is None for r in store)
+        )
+        bad = _explode_one(f"{i}b.7z", b"7z\xbc\xaf\x27\x1cgarbage")
+        bad_ok = int(
+            len(bad) == 1 and bad[0][3] is not None and bad[0][2] is None
+        )
+        return (
+            doc_id,
+            len(exploded),
+            txt_ok,
+            rtf_ok,
+            store_ok,
+            bad_ok,
+            len(text),
+            hashlib.sha256((got.get("doc.txt") or "").encode()).hexdigest(),
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_to_u32_sql, sha_hash32, sha_hash32_sql
 from ..functions.numeric import davg, davg_sql
+from ..operators.multimodal import by_doc, doc_map
 from ..registry import register
 from ..sources.readers import load_table, spread_input
 
@@ -3332,8 +3333,6 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched narrow map (parse where the rows
     live); only the 6-column fact row leaves the executor."""
-    from collections.abc import Iterator
-
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -3347,48 +3346,41 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, text):
         import hashlib
         import html as html_mod
 
         from ..functions.htmltext import extract_main_text
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                words = [w for w in (text or "").split(" ") if w]
-                k = (len(words) + 1) // 2
-                first = html_mod.escape(" ".join(words[:k]))
-                second = html_mod.escape(" ".join(words[k:]))
-                links = '<a href="#"></a>' * (i % 3)
-                page = (
-                    f"<html><head><title>Doc {i}</title>"
-                    "<style>p{color:red}</style></head>"
-                    "<body><nav>BOILER <a href='#'>skip</a>"
-                    "<p>fake para</p></nav>"
-                    f"<p>{first}</p><p>{second}</p>{links}"
-                    "<script>var a='<p>evil</p>';</script>"
-                    "<footer>MORE BOILER</footer></body></html>"
-                )
-                r = extract_main_text(page)
-                rows.append(
-                    (
-                        doc_id,
-                        r["title"],
-                        hashlib.sha256(r["text"].encode()).hexdigest(),
-                        len(r["text"]),
-                        r["n_paragraphs"],
-                        r["n_links"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        i = int(doc_id)
+        words = [w for w in (text or "").split(" ") if w]
+        k = (len(words) + 1) // 2
+        first = html_mod.escape(" ".join(words[:k]))
+        second = html_mod.escape(" ".join(words[k:]))
+        links = '<a href="#"></a>' * (i % 3)
+        page = (
+            f"<html><head><title>Doc {i}</title>"
+            "<style>p{color:red}</style></head>"
+            "<body><nav>BOILER <a href='#'>skip</a>"
+            "<p>fake para</p></nav>"
+            f"<p>{first}</p><p>{second}</p>{links}"
+            "<script>var a='<p>evil</p>';</script>"
+            "<footer>MORE BOILER</footer></body></html>"
+        )
+        r = extract_main_text(page)
+        return (
+            doc_id,
+            r["title"],
+            hashlib.sha256(r["text"].encode()).hexdigest(),
+            len(r["text"]),
+            r["n_paragraphs"],
+            r["n_links"],
+        )
 
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "text")
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
+        .transform(doc_map, schema, row)
+        .transform(by_doc)
     )

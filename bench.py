@@ -425,8 +425,12 @@ def main() -> None:
             "witness encode moved to fixture (r12)",
     }
 
-    prev = _prev_round_timings()
-    if prev is not None:
+    cpus = spark.sparkContext.defaultParallelism
+    prev = _prev_round_timings(cpus)
+    if prev is None:
+        # no recorded round at this core count: this run IS the basis
+        payload["fresh_baseline_cpus"] = cpus
+    else:
         rnd, prev_q, prev_cal = prev
         common = sorted(set(prev_q) & set(timings))
 
@@ -554,6 +558,10 @@ def _compact_line(payload: dict, timings: dict[str, float]) -> str:
             "regressed_30pct": comp["regressed_30pct"],
             "basis": "median-of-last-3-rounds (detail: BENCH_DETAIL.json)",
         }
+    elif "fresh_baseline_cpus" in payload:
+        compact["vs_prev"] = {
+            "fresh_baseline_cpus": payload["fresh_baseline_cpus"]
+        }
     if "serving_concurrent" in payload:
         sc = payload["serving_concurrent"]
         compact["serving"] = {
@@ -596,26 +604,35 @@ def _recover_tail_queries(tail: str) -> dict[str, float]:
     }
 
 
-def _prev_round_timings() -> tuple[int, dict[str, float], float | None] | None:
+def _prev_round_timings(
+    cpus: int,
+) -> tuple[int, dict[str, float], float | None] | None:
     """Per-query comparison basis: the MEDIAN of each query's last
     up-to-3 recorded rounds (newest round's calibration_sec rides
     along). A single-round basis manufactures flags the round after
     a lucky run — r12 measured pipeline_training_export at 0.96 s
     between r10/r11/r13's agreeing 1.38/1.43/1.45 s, and the r13
     bench flagged the RETURN to steady state. The median of three
-    absorbs one outlier in either direction."""
+    absorbs one outlier in either direction.
+
+    Only rounds recorded at the same core count (the file's top-level
+    ``cpus``) form the basis: the decode queries run ~8x slower at 4
+    cores than at 32, so a cross-core basis flags every one of them.
+    None when no round matches — the caller records a fresh baseline."""
     import glob
     import re
     import statistics
 
     rounds: list[tuple[int, dict[str, float], float | None]] = []
     for path in glob.glob(os.path.join(_HERE, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
+        m = re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", path)
         if not m:
             continue
         try:
             with open(path) as f:
                 doc = json.load(f)
+            if doc.get("cpus") != cpus:
+                continue
             parsed = doc.get("parsed", doc)
             if parsed is None and isinstance(doc.get("tail"), str):
                 # the driver's tail capture is the LAST 2000 chars —

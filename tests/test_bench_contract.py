@@ -18,6 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from bench import _compact_line, _recover_tail_queries  # noqa: E402
 
 
@@ -96,3 +97,29 @@ def test_tail_recovery_excludes_legacy_annotated_keys():
         '"stream_dedup": 1.31}'
     )
     assert _recover_tail_queries(tail) == {"stream_dedup": 1.31}
+
+
+def _write_round(d, name: str, cpus: int, secs: float) -> None:
+    doc = {"cpus": cpus, "parsed": {"queries": {"q": secs}}}
+    (d / name).write_text(json.dumps(doc))
+
+
+def test_prev_round_basis_keeps_only_same_core_count(tmp_path, monkeypatch):
+    """A 32-core history must not become the basis of a 4-core run:
+    only rounds whose top-level cpus equals this run's count count."""
+    monkeypatch.setattr(bench, "_HERE", str(tmp_path))
+    _write_round(tmp_path, "BENCH_r01.json", 32, 1.0)
+    _write_round(tmp_path, "BENCH_r02.json", 4, 8.0)
+    _write_round(tmp_path, "BENCH_r02_c8.json", 8, 2.0)
+    assert bench._prev_round_timings(4) == (2, {"q": 8.0}, None)
+    assert bench._prev_round_timings(8) == (2, {"q": 2.0}, None)
+    assert bench._prev_round_timings(32) == (1, {"q": 1.0}, None)
+
+
+def test_prev_round_basis_none_on_new_core_count(tmp_path, monkeypatch):
+    monkeypatch.setattr(bench, "_HERE", str(tmp_path))
+    _write_round(tmp_path, "BENCH_r01.json", 32, 1.0)
+    assert bench._prev_round_timings(4) is None
+    line = _compact_line({**_payload({"q": 1.0}), "fresh_baseline_cpus": 4}
+                         | {"common_subset_vs_prev": None}, {"q": 1.0})
+    assert json.loads(line)["vs_prev"] == {"fresh_baseline_cpus": 4}

@@ -112,6 +112,24 @@ def test_legacy_simple_font_path_unchanged():
     assert extract_pdf_text(pdf) == "plain legacy text"
 
 
+def test_flate_stream_ending_in_eol_byte_is_not_truncated():
+    """A deflate stream whose own last byte is CR or LF must inflate
+    intact: stripping the EOL before ``endstream`` would cut it."""
+    content = b"BT /F1 12 Tf (doc 1000 hello) Tj ET"
+    z = zlib.compress(content)
+    assert z[-1:] == b"\r"
+    pdf = (
+        b"%PDF-1.4\n"
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n"
+        b"4 0 obj\n<< /Filter /FlateDecode >>\nstream\n" + z +
+        b"\nendstream\nendobj\n"
+        b"%%EOF\n"
+    )
+    assert extract_pdf_text(pdf) == "doc 1000 hello"
+
+
 def test_multi_page_and_mixed_fonts():
     """Two pages; page 2 mixes a simple font and the Type0 font in one
     content stream — Tf tracking must route each string correctly."""

@@ -41,6 +41,14 @@ def test_large_input_is_not_shuffled(spark):
             readers._TABLE_BYTES[path] = old
 
 
+def test_remote_table_is_not_shuffled(spark):
+    """A non-local table path cannot be sized from the local file
+    system; it must count as unknown size, not as zero bytes."""
+    df = readers.load_table(spark, SF, "documents").select("doc_id", "text")
+    out = readers.spread_input(df, "s3a://bucket/sf", "documents")
+    assert out is df
+
+
 def test_threshold_uses_session_max_partition_bytes(spark):
     """The decision tracks spark.sql.files.maxPartitionBytes, not a
     constant: raising the split size raises the spread threshold."""
