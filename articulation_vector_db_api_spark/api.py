@@ -55,10 +55,21 @@ class EngineAPI:
             if self.chunk_table is None:
                 raise ValueError("warm() needs a chunk_table path")
             self._invalidate_locked()
-            self._serving = open_serving_index(
-                self.spark, self.chunk_table
-            )
+        self._serving_index()
         return self
+
+    def _serving_index(self) -> DataFrame:
+        """The cached serving projection, opened on first use. Checked
+        again under the lock, so racing requests build it once."""
+        serving = self._serving
+        if serving is None:
+            with self._warm_lock:
+                if self._serving is None:
+                    self._serving = open_serving_index(
+                        self.spark, self.chunk_table
+                    )
+                serving = self._serving
+        return serving
 
     def _invalidate(self) -> None:
         with self._warm_lock:
@@ -73,17 +84,7 @@ class EngineAPI:
         if self.chunk_table and (
             self._serving is not None or os.path.isdir(self.chunk_table)
         ):
-            serving = self._serving
-            if serving is None:
-                with self._warm_lock:
-                    if self._serving is None:  # double-checked: one build
-                        if self.chunk_table is None:
-                            raise ValueError("warm() needs a chunk_table")
-                        self._serving = open_serving_index(
-                            self.spark, self.chunk_table
-                        )
-                    serving = self._serving
-            return topk_search_cached(serving, query, top_k)
+            return topk_search_cached(self._serving_index(), query, top_k)
         return topk_search(self.spark, self.data_dir, query, top_k)
 
     def search(self, query: str, top_k: int = DEFAULT_TOP_K) -> dict:
@@ -173,10 +174,7 @@ class EngineAPI:
     # exposed: upsert main.py:172, query main.py:184-189; delete is the
     # third verb that index supports but the reference never surfaces) --
 
-    def vectors_upsert(
-        self, store_path: str, vectors: list[dict],
-        n_cells: int | None = None,
-    ) -> dict:
+    def vectors_upsert(self, store_path: str, vectors: list[dict]) -> dict:
         """POST /vectors/upsert: last-write-wins keyed upsert into the
         stored IVF index (O6 semantics against the engine's own store
         instead of a managed service)."""
@@ -195,12 +193,11 @@ class EngineAPI:
              for v in vectors],
             schema,
         )
-        upsert_ivf_store(self.spark, df, store_path, n_cells)
+        upsert_ivf_store(self.spark, df, store_path)
         return {"store": store_path, "upserted": len(vectors)}
 
     def vectors_delete(
-        self, store_path: str, ids: list[int], purge: bool = False,
-        n_cells: int | None = None,
+        self, store_path: str, ids: list[int], purge: bool = False
     ) -> dict:
         """POST /vectors/delete: logical tombstone delete; ``purge``
         additionally rewrites the affected cells now."""
@@ -209,10 +206,7 @@ class EngineAPI:
         )
 
         delete_from_ivf_store(self.spark, store_path, [int(i) for i in ids])
-        purged = (
-            purge_ivf_tombstones(self.spark, store_path, n_cells)
-            if purge else []
-        )
+        purged = purge_ivf_tombstones(self.spark, store_path) if purge else []
         return {"store": store_path, "deleted": len(ids),
                 "purged_cells": purged}
 

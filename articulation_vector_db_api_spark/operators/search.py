@@ -23,12 +23,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 import math
-import os
 
 from ..functions.chunking import chunk_documents
 from ..functions.embedding import hash_embedding_from_hex, hash_embedding_py
-from ..functions.vector import dot, l2_norm
-from ..sources.readers import load_table, spread_input
+from ..functions.vector import l2_norm
+from ..sources.readers import load_table, local_path_bytes, spread_input
 
 DEFAULT_TOP_K = 5  # main.py:89
 
@@ -87,20 +86,9 @@ def topk_search(
     (query_vector_literals) and scoring runs on the 32-dim digest
     pattern (chunk_patterns) — both mirrored exactly in the oracle.
     Empty-text matches are dropped before the limit (main.py:208), so
-    total_results ≤ top_k.
-    """
-    if not query or not query.strip():
-        # main.py:317-318 — empty query is a client error, not a plan
-        raise ValueError("Query cannot be empty")
-    scored = score_chunks(spark, sf_dir, query)
-    return (
-        scored.select(
-            "id", "source", "text", F.round("raw", 6).alias("score"), "raw"
-        )
-        .orderBy(F.desc("raw"), F.asc("id"))
-        .limit(top_k)
-        .drop("raw")
-    )
+    total_results ≤ top_k. An empty query raises ValueError
+    (main.py:317-318 — a client error, not a plan)."""
+    return _topk(score_chunks(spark, sf_dir, query), top_k)
 
 
 PATTERN_DIM = 32
@@ -109,8 +97,8 @@ PATTERN_DIM = 32
 def chunk_patterns(
     spark: SparkSession, sf_dir: str, spread: bool = False
 ) -> DataFrame:
-    """Chunk the corpus and attach the 32-dim scoring pattern:
-    (id, source, text, pattern).
+    """Chunk the corpus and attach the 32-dim scoring pattern and its
+    L2 norm: (id, source, text, pattern, pnorm).
 
     Model-aware rewrite: the hash embedding is 32-periodic by
     construction (digest[i % 32], main.py:142), so cosine over dims
@@ -139,7 +127,34 @@ def chunk_patterns(
             hash_embedding_from_hex(F.col("_hex"), PATTERN_DIM).alias("pattern"),
         )
         .filter(F.length("text") > 0)
+        .withColumn("pnorm", l2_norm(F.col("pattern")))
     )
+
+
+def score_patterns(patterns: DataFrame, query: str) -> DataFrame:
+    """The one cosine scorer: (id, source, text, pattern, pnorm) ->
+    (id, source, text, raw), for every search path.
+
+    ``raw`` is ONE SQL expression over a 32-literal query array (a
+    handful of py4j roundtrips instead of ~100 Column-API calls —
+    measured ~0.3 s of per-request plan-build at p50 on the serving
+    path before this): the same cast-then-multiply left fold from 0.0
+    as functions/vector.py:dot, divided by ``pnorm`` (= l2_norm of the
+    pattern) times the query-norm literal, so scores are bit-identical
+    to ``dot(pattern, q) / (l2_norm(pattern) * qnorm)``. The pattern
+    norm is query-independent, so a cached relation that persists it
+    leaves each request's fold dot-only. An empty query raises
+    ValueError."""
+    if not query or not query.strip():
+        raise ValueError("Query cannot be empty")
+    qv, qnorm = query_vector_literals(query, PATTERN_DIM)
+    qarr = "array(" + ", ".join(f"{v!r}D" for v in qv) + ")"
+    raw_sql = (
+        f"aggregate(zip_with(pattern, {qarr}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0.0D, (acc, v) -> acc + v) / (pnorm * {qnorm!r}D)"
+    )
+    return patterns.selectExpr("id", "source", "text", f"({raw_sql}) AS raw")
 
 
 def score_chunks(
@@ -148,28 +163,16 @@ def score_chunks(
     """Chunk + score the corpus against a query: (id, source, text,
     raw) with raw = cosine similarity. ``spread`` as in
     chunk_patterns."""
-    index = chunk_patterns(spark, sf_dir, spread=spread)
-    qv, qnorm = query_vector_literals(query, PATTERN_DIM)
-    qvec = F.array(*[F.lit(v) for v in qv])  # constant-folded to one literal
-    score = dot(F.col("pattern"), qvec) / (l2_norm(F.col("pattern")) * F.lit(qnorm))
-    return index.withColumn("raw", score).select("id", "source", "text", "raw")
+    return score_patterns(chunk_patterns(spark, sf_dir, spread=spread), query)
 
 
-def _pattern_topk(indexed: DataFrame, query: str, top_k: int) -> DataFrame:
-    """Top-k cosine over a (id, source, text, pattern) relation —
-    the shared tail of every stored-index search path. Plans as
+def _topk(scored: DataFrame, top_k: int) -> DataFrame:
+    """The shared top-k tail of every search path: rounded score, cut
+    by the exact total order ``raw DESC, id ASC``. Plans as
     ``TakeOrderedAndProject`` (per-partition heaps, bounded driver
-    merge); the query vector is a 32-literal constant."""
-    if not query or not query.strip():
-        raise ValueError("Query cannot be empty")
-    qv, qnorm = query_vector_literals(query, PATTERN_DIM)
-    qvec = F.array(*[F.lit(v) for v in qv])
-    score = dot(F.col("pattern"), qvec) / (
-        l2_norm(F.col("pattern")) * F.lit(qnorm)
-    )
+    merge)."""
     return (
-        indexed.withColumn("raw", score)
-        .select("id", "source", "text", F.round("raw", 6).alias("score"), "raw")
+        scored.selectExpr("id", "source", "text", "round(raw, 6) AS score", "raw")
         .orderBy(F.desc("raw"), F.asc("id"))
         .limit(top_k)
         .drop("raw")
@@ -178,13 +181,13 @@ def _pattern_topk(indexed: DataFrame, query: str, top_k: int) -> DataFrame:
 
 def _indexed_patterns(chunks: DataFrame) -> DataFrame:
     """Stored chunk table -> the serving projection (id, source, text,
-    pattern). Scoring slices the stored 1024-dim embedding down to its
-    32-dim pattern (periodicity rewrite); column pruning means only
-    the embedding + identity columns are read."""
+    pattern, pnorm). Scoring slices the stored 1024-dim embedding down
+    to its 32-dim pattern (periodicity rewrite); column pruning means
+    only the embedding + identity columns are read."""
     return chunks.filter(F.length("text") > 0).select(
         "id", "source", "text",
         F.slice(F.col("embedding"), 1, PATTERN_DIM).alias("pattern"),
-    )
+    ).withColumn("pnorm", l2_norm(F.col("pattern")))
 
 
 def topk_search_indexed(
@@ -202,14 +205,16 @@ def topk_search_indexed(
     ``open_serving_index`` once instead and search the cached
     projection."""
     chunks = spark.read.parquet(table_path)
-    return _pattern_topk(_indexed_patterns(chunks), query, top_k)
+    return _topk(score_patterns(_indexed_patterns(chunks), query), top_k)
 
 
-def open_serving_index(
-    spark: SparkSession, table_path: str, partition_bytes: int = 64 << 20
-) -> DataFrame:
+SERVING_PARTITION_BYTES = 64 << 20
+
+
+def open_serving_index(spark: SparkSession, table_path: str) -> DataFrame:
     """O15 bootstrap pre-warm: read the stored chunk table ONCE,
-    project the serving columns, persist, and materialize — the
+    project the serving columns (the pattern norm included, so every
+    request's fold is dot-only), persist, and materialize — the
     steady-state read path then runs tiny top-k plans over in-memory
     columnar batches instead of re-opening parquet footers per request
     (the reference holds its Pinecone index handle open the same way,
@@ -220,32 +225,22 @@ def open_serving_index(
     runs many concurrent top-k jobs, and per-task scheduling overhead
     on dozens of tiny cached partitions dominates latency long before
     compute does. At 100 TB the same rule yields thousands of
-    partitions — still correct.
+    partitions — still correct. The size is probed on every open (the
+    table grows with each ingest); a table the local file system
+    cannot size (``s3a://``, ``hdfs://``) keeps the scan's own
+    partitioning.
 
     MEMORY_AND_DISK: on a large cluster a 100 TB chunk table only
     partially fits executor memory — the overflow serves from local
     disk, never recomputed from source."""
     from pyspark import StorageLevel
 
-    chunks = spark.read.parquet(table_path)
-    n_parts = None
-    try:
-        bytes_total = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(table_path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-        n_parts = max(1, -(-bytes_total // partition_bytes))
-    except OSError:
-        pass  # non-local filesystem: keep the scan's own partitioning
-    # the pattern norm is query-independent: compute it once at warm
-    # time so every request's fold is dot-only (half the per-row work)
-    df = _indexed_patterns(chunks).withColumn(
-        "pnorm", l2_norm(F.col("pattern"))
-    )
-    if n_parts is not None and n_parts < df.rdd.getNumPartitions():
-        df = df.coalesce(int(n_parts))
+    df = _indexed_patterns(spark.read.parquet(table_path))
+    size = local_path_bytes(table_path)
+    if size is not None:
+        n_parts = max(1, -(-size // SERVING_PARTITION_BYTES))
+        if n_parts < df.rdd.getNumPartitions():
+            df = df.coalesce(n_parts)
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()  # materialize now: the first request must not pay the scan
     return df
@@ -254,30 +249,8 @@ def open_serving_index(
 def topk_search_cached(
     index: DataFrame, query: str, top_k: int = DEFAULT_TOP_K
 ) -> DataFrame:
-    """Top-k cosine over an ``open_serving_index`` relation.
-
-    Latency-tuned twin of :func:`_pattern_topk` producing bit-identical
-    scores: the scoring expression is ONE SQL string (a handful of py4j
-    roundtrips instead of ~100 Column-API calls — measured ~0.3 s of
-    per-request plan-build at p50 before this), the same left-to-right
-    double-precision fold as functions/vector.py:dot, divided by the
-    pre-computed ``pnorm`` times the query-norm literal."""
-    if not query or not query.strip():
-        raise ValueError("Query cannot be empty")
-    qv, qnorm = query_vector_literals(query, PATTERN_DIM)
-    qarr = "array(" + ", ".join(f"{v!r}D" for v in qv) + ")"
-    raw_sql = (
-        f"aggregate(zip_with(pattern, {qarr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, v) -> acc + v) / (pnorm * {qnorm!r}D)"
-    )
-    return (
-        index.selectExpr("id", "source", "text", f"({raw_sql}) AS raw")
-        .selectExpr("id", "source", "text", "round(raw, 6) AS score", "raw")
-        .orderBy(F.desc("raw"), F.asc("id"))
-        .limit(top_k)
-        .drop("raw")
-    )
+    """Top-k cosine over an ``open_serving_index`` relation."""
+    return _topk(score_patterns(index, query), top_k)
 
 
 def assemble_context(topk: DataFrame, query: str) -> DataFrame:

@@ -6,26 +6,38 @@ SEMANTICS in one plan; this module is the storage half of the same
 design — the claim its docstring makes ("at 100 TB the chunk table is
 written partitioned by cell") realized as operators:
 
-- ``write_ivf_store``: assign each vector its cell, write parquet
-  ``partitionBy(cell)`` (clustered first — same small-files discipline
-  as operators/ingest.py), and publish the per-cell centroid table
-  alongside as the broadcastable routing "index".
+- ``train_ivf_router``: start a store — pin its cell count
+  (``store_meta.json``) and catalog schema (``schema.json``), publish
+  the per-cell centroid table as the broadcastable routing "index",
+  and open an empty version ``v0``.
+- ``write_ivf_store`` / ``append_ivf_store``: assign each vector its
+  cell and write parquet ``partitionBy(cell)`` (clustered first — same
+  small-files discipline as operators/ingest.py).
 - ``probe_ivf_store``: route the query against the (tiny) centroid
   table, then read ONLY the probed cells — the cell predicate reaches
   the scan as a partition filter, so I/O is nprobe/n_cells of the
   corpus no matter how large the corpus grows. Exact re-rank inside
   the probed cells, top-k as a heap merge.
 
-The cell assignment reuses the deterministic quantizer from
-``ann_ivf_exact`` so both halves describe one index.
+``n_cells`` is fixed when the router is trained: every later append,
+upsert, delete and purge routes with the store's own value (the
+``/vectors/*`` request bodies carry none). Every store is versioned:
+readers scan ``vectors/v{K}`` pinned by ``_store_manifest.json``.
+
+``ann_ivf_exact`` builds its cells and centroids with this module's
+quantizer (:func:`ivf_cell`, :func:`ivf_centroids`), so both halves
+describe one index.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.numeric import davg
 from ..functions.vector import cosine
@@ -36,27 +48,21 @@ _STORE_MANIFEST = "_store_manifest.json"
 
 
 def _current_version(path: str) -> int:
-    """Version pinned by the store manifest (0 for a legacy or fresh
-    store)."""
-    import json
-
-    mpath = os.path.join(path, _STORE_MANIFEST)
-    if not os.path.exists(mpath):
-        return 0
-    with open(mpath) as f:
+    """Version pinned by the store manifest."""
+    with open(os.path.join(path, _STORE_MANIFEST)) as f:
         return int(json.load(f)["current"])
+
+
+def _version_dir(path: str, version: int) -> str:
+    return os.path.join(path, "vectors", f"v{version}")
 
 
 def current_vectors_dir(path: str) -> str:
     """The vector tree readers should scan RIGHT NOW: the manifest's
-    pinned version directory (``vectors/v{K}``), or the flat legacy
-    ``vectors/`` tree for stores written before versioning. Readers pin
-    this once per probe — every file under a published version is
-    immutable, so a probe can never observe a half-rewritten cell."""
-    vdir = os.path.join(path, "vectors")
-    if os.path.exists(os.path.join(path, _STORE_MANIFEST)):
-        return os.path.join(vdir, f"v{_current_version(path)}")
-    return vdir
+    pinned version directory (``vectors/v{K}``). Readers pin this once
+    per probe — every file under a published version is immutable, so
+    a probe can never observe a half-rewritten cell."""
+    return _version_dir(path, _current_version(path))
 
 
 def _publish_version(path: str, new_version: int, keep: int = 2) -> None:
@@ -65,9 +71,6 @@ def _publish_version(path: str, new_version: int, keep: int = 2) -> None:
     Keeping the previous version protects in-flight probes that pinned
     it just before the flip — a reader would have to outlive TWO full
     rewrites to ever see a vanished file."""
-    import json
-    import shutil
-
     mpath = os.path.join(path, _STORE_MANIFEST)
     tmp = f"{mpath}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
@@ -78,28 +81,6 @@ def _publish_version(path: str, new_version: int, keep: int = 2) -> None:
         if d.startswith("v") and d[1:].isdigit():
             if int(d[1:]) <= new_version - keep:
                 shutil.rmtree(os.path.join(vdir, d), ignore_errors=True)
-
-
-def _upgrade_legacy_layout(path: str) -> None:
-    """One-time migration for stores written before versioning: move
-    the flat ``vectors/cell=*`` tree under ``vectors/v0`` and publish a
-    manifest. Called only under the writer lock.
-
-    A probe that resolved the flat tree JUST before this runs can see a
-    half-moved directory — accepted: the migration triggers only on the
-    first purge/compact of a PRE-versioning store, exactly the
-    operations whose in-place rewrites could already break concurrent
-    legacy readers (that being the defect versioning fixes); every
-    store written since builds versioned and never enters this path."""
-    vdir = os.path.join(path, "vectors")
-    if os.path.exists(os.path.join(path, _STORE_MANIFEST)):
-        return
-    v0 = os.path.join(vdir, "v0")
-    os.makedirs(v0, exist_ok=True)
-    for d in os.listdir(vdir):
-        if d.startswith("cell="):
-            os.rename(os.path.join(vdir, d), os.path.join(v0, d))
-    _publish_version(path, 0)
 
 
 def _hardlink_cell(src_cell_dir: str, dst_cell_dir: str) -> None:
@@ -114,33 +95,53 @@ def _hardlink_cell(src_cell_dir: str, dst_cell_dir: str) -> None:
             )
 
 
-def _resolve_n_cells(path: str, n_cells: int | None) -> int:
+def _store_n_cells(path: str) -> int:
     """The cell count is a STORE property, not a per-call parameter:
-    tombstone routing computes cell = id % n_cells, so a caller passing
-    a different modulus than the one the store was built with would
-    purge the WRONG cells — the tombstoned ids' real cells stay
-    untouched, the tombstone table is then cleared, and the 'deleted'
-    rows silently resurrect. The value is pinned in store_meta.json at
-    router-training time; an explicit argument must match it (legacy
-    stores without the file trust the caller)."""
-    import json
+    tombstone routing computes cell = id % n_cells, so any modulus but
+    the one the store was built with would purge the WRONG cells — the
+    tombstoned ids' real cells stay untouched, the tombstone table is
+    then cleared, and the 'deleted' rows silently resurrect. It is
+    pinned in store_meta.json at router-training time."""
+    with open(os.path.join(path, "store_meta.json")) as f:
+        return int(json.load(f)["n_cells"])
 
-    meta_path = os.path.join(path, "store_meta.json")
-    stored = None
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            stored = int(json.load(f)["n_cells"])
-    if stored is None:
-        if n_cells is None:
-            raise ValueError(f"store at {path} has no store_meta.json; "
-                             "pass n_cells explicitly")
-        return n_cells
-    if n_cells is not None and n_cells != stored:
-        raise ValueError(
-            f"n_cells={n_cells} does not match the store's pinned "
-            f"n_cells={stored} ({meta_path})"
+
+def _store_schema(path: str) -> StructType:
+    """The store's catalog schema (schema.json): probes and rewrites
+    read with it instead of footer-inferring, and incoming batches are
+    cast to it."""
+    with open(os.path.join(path, "schema.json")) as f:
+        return StructType.fromJson(json.load(f))
+
+
+def ivf_cell(n_cells: int) -> Column:
+    """The deterministic coarse quantizer: cell = vec_id % n_cells. A
+    trained variant swaps this one projection for a broadcast-codebook
+    argmin (see mllib_ivf_ann) — everything downstream is identical
+    either way."""
+    return (F.col("vec_id") % n_cells).alias("cell")
+
+
+def ivf_centroids(ivf: DataFrame) -> DataFrame:
+    """Per-cell centroids of a (cell, embedding) relation: (cell,
+    centroid), the element-wise mean of the cell's vectors.
+    Decimal-exact means rounded to 6 (the same pin as ann_ivf_exact's
+    oracle): routing is then bit-reproducible on any engine and any
+    row order."""
+    flat = ivf.select("cell", F.posexplode("embedding")).select(
+        "cell", F.col("pos").alias("idx"), F.col("col").cast("double").alias("v")
+    )
+    return (
+        flat.groupBy("cell", "idx")
+        .agg(F.round(davg(F.col("v")), 6).alias("cv"))
+        .groupBy("cell")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("idx", "cv"))),
+                lambda x: x["cv"],
+            ).alias("centroid")
         )
-    return stored
+    )
 
 
 def _writer_lock(path: str):
@@ -160,46 +161,37 @@ def _writer_lock(path: str):
 def train_ivf_router(
     vectors: DataFrame, path: str, n_cells: int
 ) -> None:
-    """Train and persist the store's ROUTER: per-cell centroids + the
-    catalog schema. Split from the vector write because the router's
-    lifecycle is different (FAISS/ScaNN semantics): it is trained once
-    on a representative corpus, FROZEN while vectors stream in through
-    :func:`append_ivf_store`, and only rebuilt by an explicit re-train
-    + re-index. Deterministic cell = vec_id % n_cells mirrors
-    ann_ivf_exact's quantizer; a trained variant swaps this one
-    projection for a broadcast-codebook argmin (see mllib_ivf_ann) —
-    everything downstream is identical either way."""
-    ivf = vectors.select(
-        "vec_id", "embedding", (F.col("vec_id") % n_cells).alias("cell")
-    )
-    # persist the schema as the store's catalog entry: probes read with
-    # it instead of footer-inferring, so opening the store touches NO
-    # data files until the pruned scan itself
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "schema.json"), "w") as f:
-        f.write(ivf.schema.json())
-    # pin the quantizer's modulus as a store property (_resolve_n_cells)
-    with open(os.path.join(path, "store_meta.json"), "w") as f:
-        f.write(__import__("json").dumps({"n_cells": int(n_cells)}))
-    flat = ivf.select("cell", F.posexplode("embedding")).select(
-        "cell", F.col("pos").alias("idx"), F.col("col").cast("double").alias("v")
-    )
-    # decimal-exact means rounded to 6 (same pin as ann_ivf_exact):
-    # routing is then bit-reproducible on any engine and any row order
-    cent = (
-        flat.groupBy("cell", "idx")
-        .agg(F.round(davg(F.col("v")), 6).alias("cv"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "cv"))),
-                lambda x: x["cv"],
-            ).alias("centroid")
+    """Train and persist the store's ROUTER: per-cell centroids, the
+    catalog schema and the pinned ``n_cells``, and open the store's
+    version history with an empty ``v0``. Split from the vector write
+    because the router's lifecycle is different (FAISS/ScaNN
+    semantics): it is trained once on a representative corpus, FROZEN
+    while vectors stream in through :func:`append_ivf_store`, and only
+    rebuilt by an explicit re-train + re-index — so training starts a
+    fresh store: vectors routed by an earlier router (and tombstones
+    aimed at them) are dropped.
+
+    Locked like every other mutator. Re-training an existing LIVE store
+    in place drops its version history (readers pinned to an old
+    version lose their files) — production rebuilds into a fresh path
+    and repoints; this operator is the initial-build/testing form."""
+    ivf = vectors.select("vec_id", "embedding", ivf_cell(n_cells))
+    cent = ivf_centroids(ivf)
+    with _writer_lock(path):
+        # persist the schema as the store's catalog entry: probes read
+        # with it instead of footer-inferring, so opening the store
+        # touches NO data files until the pruned scan itself
+        with open(os.path.join(path, "schema.json"), "w") as f:
+            f.write(ivf.schema.json())
+        with open(os.path.join(path, "store_meta.json"), "w") as f:
+            f.write(json.dumps({"n_cells": int(n_cells)}))
+        cent.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "centroids")
         )
-    )
-    cent.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
+        for d in ("vectors", "tombstones"):
+            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        os.makedirs(_version_dir(path, 0))
+        _publish_version(path, 0)
 
 
 def write_ivf_store(
@@ -207,31 +199,13 @@ def write_ivf_store(
 ) -> None:
     """Batch build: train the router on ``vectors`` and write them all,
     partitioned by cell. (Incremental growth instead uses
-    :func:`train_ivf_router` once + :func:`append_ivf_store` per batch.)
-
-    Locked like every other mutator. Rebuilding an existing LIVE store
-    in place still drops its version history (readers pinned to an old
-    version lose their files) — production rebuilds into a fresh path
-    and repoints; this operator is the initial-build/testing form.
-    """
-    import shutil
-
+    :func:`train_ivf_router` once + :func:`append_ivf_store` per
+    batch.)"""
     train_ivf_router(vectors, path, n_cells)
-    ivf = vectors.select(
-        "vec_id", "embedding", (F.col("vec_id") % n_cells).alias("cell")
-    )
-    with _writer_lock(path):
-        # fresh build = fresh version history
-        shutil.rmtree(os.path.join(path, "vectors"), ignore_errors=True)
-        ivf.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(os.path.join(path, "vectors", "v0"))
-        _publish_version(path, 0)
+    append_ivf_store(vectors, path)
 
 
-def append_ivf_store(
-    new_vectors: DataFrame, path: str, n_cells: int | None = None
-) -> None:
+def append_ivf_store(new_vectors: DataFrame, path: str) -> None:
     """Incremental index maintenance: route a NEW batch into the
     existing cell layout and append — cost scales with the batch, not
     the store (a full ``write_ivf_store`` rebuild re-shuffles the whole
@@ -241,55 +215,36 @@ def append_ivf_store(
     here; a trained store freezes its centroid codebook between
     re-trainings the same way — FAISS/ScaNN semantics: adding vectors
     never moves existing ones), so centroids are NOT recomputed: an
-    append touches only ``vectors/cell=*/`` with new files. Parquet's
-    append mode writes fresh files per partition directory — existing
-    files are never rewritten, so concurrent probes stay consistent
-    (they read a file listing; the worst case is missing the newest
-    batch, never torn data). Periodic :func:`compact_ivf_cells` folds
-    the accumulated small files.
-
-    The batch is CAST to the store's catalog schema (schema.json)
-    before writing: mixed physical types across files (float vs double
-    arrays) would poison every subsequent scan of the partition.
+    append touches only ``vectors/v{K}/cell=*/`` with new files.
+    Parquet's append mode writes fresh files per partition directory —
+    existing files are never rewritten, so concurrent probes stay
+    consistent (they read a file listing; the worst case is missing the
+    newest batch, never torn data). Periodic :func:`compact_ivf_cells`
+    folds the accumulated small files.
 
     Takes the store writer lock: an append racing a purge/compact
     rewrite of the same cell would otherwise vanish (the rewrite's scan
     predates it; its partition overwrite then replaces the directory)."""
-    n_cells = _resolve_n_cells(path, n_cells)
     with _writer_lock(path):
-        _append_unlocked(new_vectors, path, n_cells)
+        # append INTO the current version: only adds files, so readers
+        # that pinned this version stay consistent (worst case: miss
+        # the batch)
+        _route_and_cast(new_vectors, path).repartition(
+            "cell"
+        ).write.mode("append").partitionBy("cell").parquet(
+            current_vectors_dir(path)
+        )
 
 
-def _route_and_cast(
-    new_vectors: DataFrame, path: str, n_cells: int
-) -> DataFrame:
+def _route_and_cast(new_vectors: DataFrame, path: str) -> DataFrame:
     """Assign each incoming row its frozen-router cell and conform it to
     the store's catalog schema (mixed physical types across files —
     float vs double arrays — would poison every later scan)."""
     ivf = new_vectors.select(
-        "vec_id", "embedding", (F.col("vec_id") % n_cells).alias("cell")
+        "vec_id", "embedding", ivf_cell(_store_n_cells(path))
     )
-    schema_path = os.path.join(path, "schema.json")
-    if os.path.exists(schema_path):
-        from pyspark.sql.types import StructType
-
-        with open(schema_path) as f:
-            stored = StructType.fromJson(__import__("json").loads(f.read()))
-        ivf = ivf.select(
-            *[F.col(f.name).cast(f.dataType) for f in stored.fields]
-        )
-    return ivf
-
-
-def _append_unlocked(
-    new_vectors: DataFrame, path: str, n_cells: int
-) -> None:
-    # append INTO the current version: only adds files, so readers that
-    # pinned this version stay consistent (worst case: miss the batch)
-    _route_and_cast(new_vectors, path, n_cells).repartition(
-        "cell"
-    ).write.mode("append").partitionBy("cell").parquet(
-        current_vectors_dir(path)
+    return ivf.select(
+        *[F.col(f.name).cast(f.dataType) for f in _store_schema(path).fields]
     )
 
 
@@ -307,27 +262,11 @@ def delete_from_ivf_store(
     its table clear would be silently dropped."""
     if not vec_ids:
         return
+    ids = spark.createDataFrame([(int(v),) for v in vec_ids], "vec_id long")
     with _writer_lock(path):
-        _delete_unlocked(spark, path, vec_ids)
-
-
-def _delete_unlocked(
-    spark: SparkSession, path: str, vec_ids: list[int]
-) -> None:
-    _delete_df_unlocked(
-        spark.createDataFrame([(int(v),) for v in vec_ids], "vec_id long"),
-        path,
-    )
-
-
-def _delete_df_unlocked(tomb_df: DataFrame, path: str) -> None:
-    """DataFrame-native tombstone write: the id set never touches the
-    driver, so a multi-million-row upsert batch tombstones at dataset
-    scale (the list overload above is the explicit-API convenience for
-    user-supplied delete lists, which are inherently small)."""
-    tomb_df.select(F.col("vec_id").cast("long")).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(path, "tombstones"))
+        ids.coalesce(1).write.mode("append").parquet(
+            os.path.join(path, "tombstones")
+        )
 
 
 def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -338,8 +277,7 @@ def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def upsert_ivf_store(
-    spark: SparkSession, new_vectors: DataFrame, path: str,
-    n_cells: int | None = None,
+    spark: SparkSession, new_vectors: DataFrame, path: str
 ) -> None:
     """Keyed upsert (the reference's last-write-wins id semantics,
     main.py:163,172, in the stored index): MERGE-ON-WRITE — one
@@ -369,7 +307,6 @@ def upsert_ivf_store(
     set / replacement rows both read the staged files — so a 100M-row
     upsert holds nothing in driver memory and compiles no giant
     IN-list into any plan (the rewrite anti-joins the drop set)."""
-    import shutil
     import uuid
 
     w = Window.partitionBy("vec_id").orderBy(F.col("__seq").desc())
@@ -387,7 +324,6 @@ def upsert_ivf_store(
         batch = spark.read.parquet(staging)
         if batch.isEmpty():
             return
-        n_cells = _resolve_n_cells(path, n_cells)
         with _writer_lock(path):
             drop = batch.select("vec_id")
             tomb = _tombstones(spark, path)
@@ -399,9 +335,7 @@ def upsert_ivf_store(
                 # No distinct(): the anti-join and the distinct-cell
                 # projection both tolerate duplicate ids for free
                 drop = drop.unionByName(tomb)
-            _rewrite_cells_unlocked(
-                spark, path, n_cells, drop, add_batch=batch
-            )
+            _rewrite_cells_unlocked(spark, path, drop, add_batch=batch)
             if tomb is not None:
                 shutil.rmtree(
                     os.path.join(path, "tombstones"), ignore_errors=True
@@ -410,104 +344,90 @@ def upsert_ivf_store(
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def purge_ivf_tombstones(
-    spark: SparkSession, path: str, n_cells: int | None = None
-) -> list[int]:
+def purge_ivf_tombstones(spark: SparkSession, path: str) -> list[int]:
     """Physical delete: rewrite ONLY the cells that contain tombstoned
     ids (cell = the store's frozen routing of the id) into a NEW store
     version, dropping those rows, then clear the tombstone table. Scan
     cost ~ the affected cells, never the store. Returns the rewritten
     cell ids.
 
-    Versioned rewrite (the table-format pattern): affected cells'
-    survivors are written under ``vectors/v{K+1}``, every untouched
-    cell's files are HARDLINKED across (no bytes read or copied), and
-    the manifest flips atomically — a concurrent probe either pinned
-    v{K} (still fully intact; the previous version is retained) or pins
-    v{K+1}. Fully-tombstoned cells simply have no directory in the new
-    version — the resurrection hazard of an in-place dynamic overwrite
-    cannot exist here.
+    Versioned rewrite (the table-format pattern, :func:`_rewrite_version`):
+    fully-tombstoned cells simply have no directory in the new version
+    — the resurrection hazard of an in-place dynamic overwrite cannot
+    exist here.
 
     Locked (rewrite + tombstone clear must exclude appends/deletes)."""
-    n_cells = _resolve_n_cells(path, n_cells)
     with _writer_lock(path):
-        return _purge_unlocked(spark, path, n_cells)
-
-
-def _purge_unlocked(
-    spark: SparkSession, path: str, n_cells: int
-) -> list[int]:
-    import shutil
-
-    tomb = _tombstones(spark, path)
-    if tomb is None:
-        return []
-    cells = _rewrite_cells_unlocked(spark, path, n_cells, tomb)
-    shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
-    return cells
+        tomb = _tombstones(spark, path)
+        if tomb is None:
+            return []
+        cells = _rewrite_cells_unlocked(spark, path, tomb)
+        shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
+        return cells
 
 
 def _rewrite_cells_unlocked(
     spark: SparkSession,
     path: str,
-    n_cells: int,
     drop_ids: DataFrame,
     add_batch: DataFrame | None = None,
 ) -> list[int]:
-    """The versioned-rewrite core shared by purge and upsert: in ONE
-    pass over the affected cells, drop every ``drop_ids`` row and (for
-    upserts) fold ``add_batch`` rows into the same write — survivors
-    and replacements land together in ``vectors/v{K+1}``, untouched
-    cells hardlink across, the manifest flips atomically.
+    """The cell rewrite shared by purge and upsert: in ONE pass over
+    the cells the ``drop_ids`` route to, drop every ``drop_ids`` row
+    and (for upserts) fold ``add_batch`` rows into the same write —
+    survivors and replacements land together in the next version.
 
     Only the DISTINCT CELL list comes to the driver — bounded by
     n_cells (a store property), never by the drop count. The ids stay
     a DataFrame end-to-end: a rewrite after a 100M-row delete holds
     ~n_cells ints in driver memory and compiles no IN-list plan."""
-    import shutil
-
     cells = sorted(
         r.cell
-        for r in drop_ids.select(
-            (F.col("vec_id") % n_cells).cast("int").alias("cell")
-        )
+        for r in drop_ids.select(ivf_cell(_store_n_cells(path)))
         .distinct()
         .collect()
     )
     if not cells:
         return []
-    _upgrade_legacy_layout(path)
-    from pyspark.sql.types import StructType
 
-    with open(os.path.join(path, "schema.json")) as f:
-        schema = StructType.fromJson(__import__("json").loads(f.read()))
-    k = _current_version(path)
-    src = os.path.join(path, "vectors", f"v{k}")
-    dst = os.path.join(path, "vectors", f"v{k + 1}")
-    shutil.rmtree(dst, ignore_errors=True)  # crashed prior attempt
-    vecs = spark.read.schema(schema).parquet(src)
-    out = (
-        vecs.filter(F.col("cell").isin(cells))  # partition-pruned scan
+    def edit(scan: DataFrame) -> DataFrame:
         # drop as an anti-join — no driver id list, no compiled
         # IN-list plan. No broadcast HINT on purpose: probes broadcast
         # because tombstones are tiny between purges, but the rewrite
         # is exactly where a huge delete/upsert batch lands — AQE picks
         # broadcast when the table is small and shuffles when it isn't
-        .join(drop_ids.select("vec_id"), "vec_id", "left_anti")
-    )
-    if add_batch is not None:
+        out = scan.join(drop_ids.select("vec_id"), "vec_id", "left_anti")
+        if add_batch is None:
+            return out
         # every add row's cell is in `cells` by construction (the
         # caller's drop set contains the batch ids), so the union
         # cannot leak rows into a cell the hardlink loop also copies
-        out = out.unionByName(_route_and_cast(add_batch, path, n_cells))
-    out.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(dst)
+        return out.unionByName(_route_and_cast(add_batch, path))
+
+    _rewrite_version(spark, path, cells, edit)
+    return cells
+
+
+def _rewrite_version(spark: SparkSession, path: str, cells, edit) -> None:
+    """The one versioned rewrite (the table-format pattern), under the
+    writer lock: pin version K, clear ``v{K+1}`` (a crashed prior
+    attempt), scan ONLY ``cells`` of v{K} (partition-pruned), write
+    ``edit(scan)`` partitioned by cell as ``v{K+1}``, hardlink every
+    untouched cell's files across (no bytes read or copied), and flip
+    the manifest atomically — a concurrent probe either pinned v{K}
+    (still fully intact; the previous version is retained) or pins
+    v{K+1}."""
+    k = _current_version(path)
+    src, dst = _version_dir(path, k), _version_dir(path, k + 1)
+    shutil.rmtree(dst, ignore_errors=True)
+    scan = spark.read.schema(_store_schema(path)).parquet(src)
+    edit(scan.filter(F.col("cell").isin(cells))).repartition(
+        "cell"  # one file per rewritten cell
+    ).write.mode("overwrite").partitionBy("cell").parquet(dst)
     for d in os.listdir(src):
         if d.startswith("cell=") and int(d.split("=")[1]) not in cells:
             _hardlink_cell(os.path.join(src, d), os.path.join(dst, d))
     _publish_version(path, k + 1)
-    return cells
 
 
 def compact_ivf_cells(
@@ -519,8 +439,8 @@ def compact_ivf_cells(
     cells that need it: per-cell file counts come from the directory
     listing (no data read), each offending cell is rewritten by a scan
     of that cell alone into the NEXT store version, and every other
-    cell's files hardlink across untouched (same versioned-rewrite
-    shape as the purge — concurrent probes keep their pinned version).
+    cell's files hardlink across untouched (the same versioned rewrite
+    as the purge — concurrent probes keep their pinned version).
     Returns {cell: n_files_before} for the rewritten cells. Scan cost ~
     size of the compacted cells, never the store.
 
@@ -528,46 +448,20 @@ def compact_ivf_cells(
     (the append's files would be replaced by a scan that never saw
     them)."""
     with _writer_lock(path):
-        return _compact_unlocked(spark, path, max_files_per_cell)
-
-
-def _compact_unlocked(
-    spark: SparkSession, path: str, max_files_per_cell: int
-) -> dict:
-    import shutil
-
-    _upgrade_legacy_layout(path)
-    k = _current_version(path)
-    src = os.path.join(path, "vectors", f"v{k}")
-    counts = {
-        int(d.split("=")[1]): sum(
-            1 for f in os.listdir(os.path.join(src, d)) if f.endswith(".parquet")
-        )
-        for d in os.listdir(src)
-        if d.startswith("cell=")
-    }
-    fat = {c: n for c, n in counts.items() if n > max_files_per_cell}
-    if not fat:
-        return {}
-    from pyspark.sql.types import StructType
-
-    with open(os.path.join(path, "schema.json")) as f:
-        schema = StructType.fromJson(__import__("json").loads(f.read()))
-    dst = os.path.join(path, "vectors", f"v{k + 1}")
-    shutil.rmtree(dst, ignore_errors=True)  # crashed prior attempt
-    vecs = spark.read.schema(schema).parquet(src)
-    (
-        vecs.filter(F.col("cell").isin(list(fat)))  # partition-pruned scan
-        .repartition("cell")  # one file per rewritten cell
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(dst)
-    )
-    for d in os.listdir(src):
-        if d.startswith("cell=") and int(d.split("=")[1]) not in fat:
-            _hardlink_cell(os.path.join(src, d), os.path.join(dst, d))
-    _publish_version(path, k + 1)
-    return fat
+        src = current_vectors_dir(path)
+        counts = {
+            int(d.split("=")[1]): sum(
+                1
+                for f in os.listdir(os.path.join(src, d))
+                if f.endswith(".parquet")
+            )
+            for d in os.listdir(src)
+            if d.startswith("cell=")
+        }
+        fat = {c: n for c, n in counts.items() if n > max_files_per_cell}
+        if fat:
+            _rewrite_version(spark, path, list(fat), lambda scan: scan)
+        return fat
 
 
 def probe_ivf_store(
@@ -605,11 +499,7 @@ def _scored_candidates(
     store version (immutable files, retained through the next rewrite),
     apply the tombstone anti-join, and score the probed cells —
     returning (vec_id, cell, raw)."""
-    from pyspark.sql.types import StructType
-
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    with open(os.path.join(path, "schema.json")) as f:
-        schema = StructType.fromJson(__import__("json").loads(f.read()))
     cent = spark.read.parquet(os.path.join(path, "centroids"))
     routed = (
         cent.select(
@@ -630,7 +520,9 @@ def _scored_candidates(
             f"{routed[0].dim}"
         )
     cells = [r.cell for r in routed]
-    vecs = spark.read.schema(schema).parquet(current_vectors_dir(path))
+    vecs = spark.read.schema(_store_schema(path)).parquet(
+        current_vectors_dir(path)
+    )
     if exclude_vec_id is not None:
         vecs = vecs.filter(F.col("vec_id") != exclude_vec_id)
     tomb = _tombstones(spark, path)

@@ -136,14 +136,12 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send(200, self.api.vectors_upsert(
                     str(req.get("store") or self.cfg.vector_store_path),
                     list(req.get("vectors") or []),
-                    int(req["n_cells"]) if "n_cells" in req else None,
                 ))
             elif self.path == "/vectors/delete":
                 self._send(200, self.api.vectors_delete(
                     str(req.get("store") or self.cfg.vector_store_path),
                     list(req.get("ids") or []),
                     bool(req.get("purge", False)),
-                    int(req["n_cells"]) if "n_cells" in req else None,
                 ))
             elif self.path == "/vectors/query":
                 vec = req.get("vector")

@@ -13,6 +13,7 @@ else.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -126,28 +127,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-# r17 (guide §2.4, remove shuffles outright): total on-disk bytes per
-# table path, memoized — one os.walk per path per process. Feeds the
-# spread_input() decision below without touching Spark planning (a
-# df.rdd.getNumPartitions() probe costs ~100 ms of py4j/planning per
-# call, which would land inside the bench's timed region).
-_TABLE_BYTES: dict[str, int] = {}
+def local_path_bytes(path: str) -> int | None:
+    """On-disk bytes of a local file or directory tree (``_SUCCESS`` /
+    ``.crc``-style sidecars skipped), or ``None`` when the size is
+    unknown: a non-local URI (``s3a://``, ``hdfs://``) is invisible to
+    ``os`` and would otherwise read as zero bytes. ``file:`` URIs are
+    local. Not memoized — a served table grows with each ingest."""
+    if path.startswith("file:"):
+        path = urlparse(path).path
+    elif "://" in path:
+        return None
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, fname))
+        for root, _dirs, files in os.walk(path)
+        for fname in files
+        if not fname.startswith((".", "_"))
+    )
 
 
-def _path_bytes(path: str) -> int:
-    cached = _TABLE_BYTES.get(path)
-    if cached is None:
-        if os.path.isfile(path):
-            cached = os.path.getsize(path)
-        else:
-            cached = 0
-            for root, _dirs, files in os.walk(path):
-                for fname in files:
-                    if fname.startswith((".", "_")):
-                        continue  # _SUCCESS, .crc sidecars
-                    cached += os.path.getsize(os.path.join(root, fname))
-        _TABLE_BYTES[path] = cached
-    return cached
+# r17 (guide §2.4, remove shuffles outright): the spread_input()
+# decision memoizes the probe per table path — fixture tables never
+# change within a process, and re-walking them would land inside the
+# bench's timed region (a df.rdd.getNumPartitions() probe instead costs
+# ~100 ms of py4j/planning per call).
+_TABLE_BYTES: dict[str, int | None] = {}
+
+
+def _path_bytes(path: str) -> int | None:
+    if path not in _TABLE_BYTES:
+        _TABLE_BYTES[path] = local_path_bytes(path)
+    return _TABLE_BYTES[path]
 
 
 def _conf_bytes(raw: str) -> int:
@@ -192,11 +203,9 @@ def spread_input(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     max_split = _conf_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if "://" in path and not path.startswith("file:"):
-        return df  # remote store: size unknown, trust its own splits
-    if _path_bytes(path) >= n * max_split:
-        return df
+    size = _path_bytes(os.path.join(sf_dir, f"{name}.parquet"))
+    if size is None or size >= n * max_split:
+        return df  # unknown size (remote store) or already >= n splits
     return df.repartition(n)
 
 

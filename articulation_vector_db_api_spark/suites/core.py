@@ -196,7 +196,7 @@ def search_batch_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     query per Pinecone round-trip; the engine's per-query marginal cost
     is a 32-float dot product — this is why batch eval/retrieval jobs
     belong on Spark."""
-    from ..functions.vector import dot, l2_norm
+    from ..functions.vector import dot
     from ..operators.search import chunk_patterns
 
     qrows = []
@@ -205,12 +205,9 @@ def search_batch_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
         qrows.append((qid, qv, qnorm))
     qdf = spark.createDataFrame(qrows, "qid int, qvec array<double>, qnorm double")
 
-    # pattern norm hoisted ABOVE the query fan-out: computed once per
-    # chunk, not once per (chunk x query) pair
-    chunks = chunk_patterns(spark, sf_dir).withColumn(
-        "pnorm", l2_norm(F.col("pattern"))
-    )
-    scored = chunks.join(F.broadcast(qdf)).select(
+    # chunk_patterns carries the pattern norm, computed ABOVE the query
+    # fan-out: once per chunk, not once per (chunk x query) pair
+    scored = chunk_patterns(spark, sf_dir).join(F.broadcast(qdf)).select(
         "qid",
         "id",
         (

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.embedding import embedding_sql_duckdb, hash_embedding
-from ..functions.numeric import davg
 from ..functions.vector import cosine, cosine_sql_duckdb, dot, dot_sql_duckdb, l2_norm
+from ..operators.vector_store import ivf_cell, ivf_centroids
 from ..registry import register
 from ..sources.readers import load_table, spread_input
 
@@ -301,30 +301,16 @@ _IVF_CENT_CTE = f"""
 
 def _ivf_cells_and_centroids(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The Spark twin of _IVF_CENT_CTE: (vec_id, embedding, cell) plus
-    the per-cell decimal-exact centroid table."""
-    ivf = e.select(
-        "vec_id", "embedding", (F.col("vec_id") % N_IVF_CELLS).alias("cell")
-    )
-    flat = ivf.select("cell", F.posexplode(F.col("embedding"))).select(
-        "cell", F.col("pos").alias("idx"), F.col("col").cast("double").alias("v")
-    )
-    cent = (
-        flat.groupBy("cell", "idx")
-        .agg(F.round(davg(F.col("v")), 6).alias("cv"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "cv"))),
-                lambda x: x["cv"],
-            ).alias("c")
-        )
-    )
-    return ivf, cent
+    the per-cell decimal-exact (cell, centroid) table — the stored
+    index's own quantizer (operators/vector_store.py)."""
+    ivf = e.select("vec_id", "embedding", ivf_cell(N_IVF_CELLS))
+    return ivf, ivf_centroids(ivf)
 
 
-@register(
-    "ann_ivf_exact",
-    oracle=f"""
+# ann_ivf_exact's oracle, shared by every stored-IVF query: identical
+# results through a completely different physical path is exactly what
+# a storage layer must guarantee.
+_IVF_ORACLE = f"""
     WITH {_IVF_CENT_CTE},
     qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
     cellrank AS (
@@ -339,9 +325,10 @@ def _ivf_cells_and_centroids(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     SELECT vec_id, cell, round(raw, 6) AS score
     FROM cand ORDER BY raw DESC, vec_id LIMIT 10
-    """,
-    tags=("similarity",),
-)
+    """
+
+
+@register("ann_ivf_exact", oracle=_IVF_ORACLE, tags=("similarity",))
 def ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN with a full cross-engine oracle: vectors
     are assigned to cells (deterministic coarse quantizer), per-cell
@@ -360,7 +347,7 @@ def ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cellrank = (
         cent.join(F.broadcast(q))
-        .select("cell", cosine(F.col("c"), F.col("q")).alias("cs"))
+        .select("cell", cosine(F.col("centroid"), F.col("q")).alias("cs"))
         .orderBy(F.desc("cs"), "cell")
         .limit(N_IVF_PROBES)
     )
@@ -375,38 +362,6 @@ def ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select("vec_id", "cell", F.round("raw", 6).alias("score"))
     )
-
-
-_IVF_STORED_ORACLE = f"""
-    WITH ivf AS (
-        SELECT vec_id, embedding, vec_id % {N_IVF_CELLS} AS cell FROM embeddings
-    ),
-    flat AS (
-        SELECT cell, generate_subscripts(embedding, 1) AS idx,
-               CAST(unnest(embedding) AS DOUBLE) AS v
-        FROM ivf
-    ),
-    cent_flat AS (
-        SELECT cell, idx,
-               round(CAST(sum(CAST(v AS DECIMAL(30,8))) AS DOUBLE) / count(*), 6)
-                   AS cv
-        FROM flat GROUP BY cell, idx
-    ),
-    cent AS (SELECT cell, list(cv ORDER BY idx) AS c FROM cent_flat GROUP BY cell),
-    qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
-    cellrank AS (
-        SELECT cell, {cosine_sql_duckdb("c", "q")} AS cs
-        FROM cent, qv
-        ORDER BY cs DESC, cell LIMIT {N_IVF_PROBES}
-    ),
-    cand AS (
-        SELECT i.vec_id, i.cell, {cosine_sql_duckdb("i.embedding", "q")} AS raw
-        FROM ivf i, cellrank cr, qv
-        WHERE i.cell = cr.cell AND i.vec_id != {QUERY_VEC_ID}
-    )
-    SELECT vec_id, cell, round(raw, 6) AS score
-    FROM cand ORDER BY raw DESC, vec_id LIMIT 10
-    """
 
 
 def _app_scoped_store(spark: SparkSession, prefix: str, sf_dir: str) -> str:
@@ -509,9 +464,16 @@ def _build_once(spark: SparkSession, prefix: str, sf_dir: str, build) -> str:
     return store
 
 
+def _query_vec(e: DataFrame) -> list[float]:
+    """The probe query (vec_id QUERY_VEC_ID) as Python floats: a 1-row
+    collect at DataFrame-build time."""
+    row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").first()
+    return [float(x) for x in row[0]]
+
+
 @register(
     "ann_ivf_stored_probe",
-    oracle=_IVF_STORED_ORACLE,
+    oracle=_IVF_ORACLE,
     tags=("similarity",),
 )
 def ann_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,39 +487,30 @@ def ann_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     results through a completely different physical path is exactly
     what a storage layer must guarantee.
 
-    SIDE-EFFECTFUL BUILDER: unlike every other registered query, this
+    SIDE-EFFECTFUL BUILDER: unlike most registered queries, this
     builder runs real jobs at DataFrame-build time — the store write
-    (first invocation only) and a 1-row collect for the query vector.
-    The store path is unique per (fixture, Spark application id) so
-    concurrent runs never race on one directory, and a completed store
-    is marked and reused, so schema-only tooling (tools/check_types.py,
-    repeated plan builds in one session) pays the write exactly once."""
-    import os
-
+    (first invocation only, through _build_once) and a 1-row collect
+    for the query vector. The store path is unique per (fixture, Spark
+    application id) so concurrent runs never race on one directory,
+    and a completed store is marked and reused, so schema-only tooling
+    (tools/check_types.py, repeated plan builds in one session) pays
+    the write exactly once."""
     from ..operators.vector_store import probe_ivf_store, write_ivf_store
 
     e = load_table(spark, sf_dir, "embeddings")
-    store = _app_scoped_store(spark, "ivf_store", sf_dir)
-    marker = os.path.join(store, "_STORE_COMPLETE")
-    if not os.path.exists(marker):
-        write_ivf_store(e, store, N_IVF_CELLS)
-        with open(marker, "w"):
-            pass
-    qvec = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
+    store = _build_once(
+        spark, "ivf_store", sf_dir,
+        lambda path: write_ivf_store(e, path, N_IVF_CELLS),
+    )
     return probe_ivf_store(
-        spark, store, qvec, nprobe=N_IVF_PROBES, k=10,
+        spark, store, _query_vec(e), nprobe=N_IVF_PROBES, k=10,
         exclude_vec_id=QUERY_VEC_ID,
     )
 
 
 @register(
     "ann_ivf_incremental_probe",
-    oracle=_IVF_STORED_ORACLE,
+    oracle=_IVF_ORACLE,
     tags=("similarity",),
 )
 def ann_ivf_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,7 +519,7 @@ def ann_ivf_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives as TWO appended batches (append_ivf_store — cost per ingest
     scales with the batch, the store is never rebuilt), small files are
     folded by per-cell compaction (compact_ivf_cells — rewrites ONLY
-    offending cells via dynamic partition overwrite), and the probe is
+    offending cells, into a new store version), and the probe is
     partition-pruned as ever. The oracle is the SAME SQL as
     ann_ivf_stored_probe: grow-by-append + compact must be
     indistinguishable from a batch build — the maintenance-path
@@ -575,8 +528,6 @@ def ann_ivf_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIDE-EFFECTFUL BUILDER (same contract as ann_ivf_stored_probe):
     store writes happen at build time, keyed by (fixture, app id),
     completed-store marker skips rebuilds."""
-    import os
-
     from ..operators.vector_store import (
         append_ivf_store,
         compact_ivf_cells,
@@ -585,32 +536,24 @@ def ann_ivf_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    store = _app_scoped_store(spark, "ivf_incr", sf_dir)
-    marker = os.path.join(store, "_STORE_COMPLETE")
-    if not os.path.exists(marker):
-        mid_row = e.agg(F.max("vec_id")).first()
-        mid = int(mid_row[0]) // 2
-        train_ivf_router(e, store, N_IVF_CELLS)
-        append_ivf_store(e.filter(F.col("vec_id") <= mid), store, N_IVF_CELLS)
-        append_ivf_store(e.filter(F.col("vec_id") > mid), store, N_IVF_CELLS)
-        compact_ivf_cells(spark, store, max_files_per_cell=1)
-        with open(marker, "w"):
-            pass
-    qvec = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
+
+    def build(path: str) -> None:
+        mid = int(e.agg(F.max("vec_id")).first()[0]) // 2
+        train_ivf_router(e, path, N_IVF_CELLS)
+        append_ivf_store(e.filter(F.col("vec_id") <= mid), path)
+        append_ivf_store(e.filter(F.col("vec_id") > mid), path)
+        compact_ivf_cells(spark, path, max_files_per_cell=1)
+
+    store = _build_once(spark, "ivf_incr", sf_dir, build)
     return probe_ivf_store(
-        spark, store, qvec, nprobe=N_IVF_PROBES, k=10,
+        spark, store, _query_vec(e), nprobe=N_IVF_PROBES, k=10,
         exclude_vec_id=QUERY_VEC_ID,
     )
 
 
 @register(
     "ann_ivf_delete_probe",
-    oracle=_IVF_STORED_ORACLE.replace(
+    oracle=_IVF_ORACLE.replace(
         "ORDER BY raw DESC, vec_id LIMIT 10",
         # deleting the top-2 neighbors then probing top-10 must equal
         # ranks 3..12 of the undeleted ranking (routing is unchanged —
@@ -623,16 +566,14 @@ def ann_ivf_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletes in the stored index, end to end: probe for the query's
     top-2 neighbors, tombstone them (logical delete — O(ids), no data
     file touched, probes anti-join the broadcast tombstone set), purge
-    (physical delete — ONLY the affected cells rewritten via dynamic
-    partition overwrite), then probe again. The oracle is the stored
+    (physical delete — ONLY the affected cells rewritten, into a new
+    store version), then probe again. The oracle is the stored
     ranking at OFFSET 2: removal of the top-2 must slide ranks 3..12
     into the top-10 exactly — deletes may never perturb surviving
     scores or routing.
 
     SIDE-EFFECTFUL BUILDER (same contract as ann_ivf_stored_probe):
     app-scoped store, completed-store marker skips rebuilds."""
-    import os
-
     from ..operators.vector_store import (
         delete_from_ivf_store,
         probe_ivf_store,
@@ -641,24 +582,18 @@ def ann_ivf_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    store = _app_scoped_store(spark, "ivf_del", sf_dir)
-    marker = os.path.join(store, "_STORE_COMPLETE")
-    qvec = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
-    if not os.path.exists(marker):
-        write_ivf_store(e, store, N_IVF_CELLS)
+    qvec = _query_vec(e)
+
+    def build(path: str) -> None:
+        write_ivf_store(e, path, N_IVF_CELLS)
         top2 = probe_ivf_store(
-            spark, store, qvec, nprobe=N_IVF_PROBES, k=2,
+            spark, path, qvec, nprobe=N_IVF_PROBES, k=2,
             exclude_vec_id=QUERY_VEC_ID,
         ).collect()
-        delete_from_ivf_store(spark, store, [int(r.vec_id) for r in top2])
-        purge_ivf_tombstones(spark, store, N_IVF_CELLS)
-        with open(marker, "w"):
-            pass
+        delete_from_ivf_store(spark, path, [int(r.vec_id) for r in top2])
+        purge_ivf_tombstones(spark, path)
+
+    store = _build_once(spark, "ivf_del", sf_dir, build)
     return probe_ivf_store(
         spark, store, qvec, nprobe=N_IVF_PROBES, k=10,
         exclude_vec_id=QUERY_VEC_ID,
@@ -1069,21 +1004,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_ivfpq_adc_topk",
     oracle=f"""
-    WITH ivf AS (
-        SELECT vec_id, embedding, vec_id % {N_IVF_CELLS} AS cell FROM embeddings
-    ),
-    flat AS (
-        SELECT cell, generate_subscripts(embedding, 1) AS idx,
-               CAST(unnest(embedding) AS DOUBLE) AS v
-        FROM ivf
-    ),
-    cent_flat AS (
-        SELECT cell, idx,
-               round(CAST(sum(CAST(v AS DECIMAL(30,8))) AS DOUBLE) / count(*), 6)
-                   AS cv
-        FROM flat GROUP BY cell, idx
-    ),
-    cent AS (SELECT cell, list(cv ORDER BY idx) AS c FROM cent_flat GROUP BY cell),
+    WITH {_IVF_CENT_CTE},
     qe AS (SELECT embedding AS q FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
     cellrank AS (
         SELECT cell, {cosine_sql_duckdb("c", "q")} AS cs
@@ -1156,27 +1077,13 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned storage); encode + ADC stay map-side codegen; both
     shortlist and final top-k are TakeOrderedAndProject heap merges."""
     e = load_table(spark, sf_dir, "embeddings")
-    ivf = e.select(
-        "vec_id", "embedding", (F.col("vec_id") % N_IVF_CELLS).alias("cell")
-    )
-    # centroid build: element-wise decimal means (identical to ann_ivf_exact)
-    flat = ivf.select("cell", F.posexplode(F.col("embedding"))).select(
-        "cell", F.col("pos").alias("idx"), F.col("col").cast("double").alias("v")
-    )
-    cent_flat = flat.groupBy("cell", "idx").agg(
-        F.round(davg(F.col("v")), 6).alias("cv")
-    )
-    cent = cent_flat.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("idx", "cv"))), lambda x: x["cv"]
-        ).alias("c")
-    )
+    _, cent = _ivf_cells_and_centroids(e)  # ann_ivf_exact's quantizer
     qe = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q")
     )
     probed = (
         cent.crossJoin(F.broadcast(qe))
-        .select("cell", cosine(F.col("c"), F.col("q")).alias("cs"))
+        .select("cell", cosine(F.col("centroid"), F.col("q")).alias("cs"))
         .orderBy(F.desc("cs"), "cell")
         .limit(N_IVF_PROBES)
         .select("cell")
@@ -1185,7 +1092,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = e.transform(spread_input, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        (F.col("vec_id") % N_IVF_CELLS).alias("cell"),
+        ivf_cell(N_IVF_CELLS),
     )
     tiny = e.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
@@ -1417,7 +1324,7 @@ def ann_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_range_query",
-    oracle=_IVF_STORED_ORACLE.replace(
+    oracle=_IVF_ORACLE.replace(
         "SELECT vec_id, cell, round(raw, 6) AS score\n"
         "    FROM cand ORDER BY raw DESC, vec_id LIMIT 10",
         "SELECT vec_id, cell, round(raw, 6) AS score\n"
@@ -1436,25 +1343,15 @@ def ann_ivf_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SIDE-EFFECTFUL BUILDER (same contract as ann_ivf_stored_probe):
     app-scoped store, completed-store marker skips rebuilds."""
-    import os
-
     from ..operators.vector_store import probe_ivf_range, write_ivf_store
 
     e = load_table(spark, sf_dir, "embeddings")
-    store = _app_scoped_store(spark, "ivf_range", sf_dir)
-    marker = os.path.join(store, "_STORE_COMPLETE")
-    if not os.path.exists(marker):
-        write_ivf_store(e, store, N_IVF_CELLS)
-        with open(marker, "w"):
-            pass
-    qvec = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .first()[0]
-    ]
+    store = _build_once(
+        spark, "ivf_range", sf_dir,
+        lambda path: write_ivf_store(e, path, N_IVF_CELLS),
+    )
     return probe_ivf_range(
-        spark, store, qvec, nprobe=N_IVF_PROBES, min_score=0.2,
+        spark, store, _query_vec(e), nprobe=N_IVF_PROBES, min_score=0.2,
         exclude_vec_id=QUERY_VEC_ID,
     )
 
@@ -1612,7 +1509,11 @@ def ann_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cellrank = cent.join(F.broadcast(q)).select(
         "cell",
         F.row_number()
-        .over(Window.orderBy(F.desc(cosine(F.col("c"), F.col("q"))), F.col("cell")))
+        .over(
+            Window.orderBy(
+                F.desc(cosine(F.col("centroid"), F.col("q"))), F.col("cell")
+            )
+        )
         .alias("rn"),
     )
     scored = (

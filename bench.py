@@ -161,7 +161,7 @@ def _runner(spark, sf_dir: str, registry, name: str):
                 ),
             )
             t0 = time.perf_counter()
-            upsert_ivf_store(spark, batch, _IVF_STORE, 16)
+            upsert_ivf_store(spark, batch, _IVF_STORE)
             _noop_write(
                 probe_ivf_store(spark, _IVF_STORE, qvec, nprobe=4, k=10)
             )

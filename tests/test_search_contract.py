@@ -52,20 +52,12 @@ def test_serving_index_parity_and_invalidation(spark, tmp_path):
     indexed path, and EngineAPI invalidates the cache when the table
     is re-ingested underneath it."""
     from articulation_vector_db_api_spark.api import EngineAPI
-    from articulation_vector_db_api_spark.operators.ingest import (
-        build_chunk_rows, write_chunk_table,
-    )
     from articulation_vector_db_api_spark.operators.search import (
         open_serving_index, topk_search_cached, topk_search_indexed,
     )
-    from articulation_vector_db_api_spark.sources.readers import load_table
 
     table = str(tmp_path / "chunks")
-    docs = load_table(spark, SF_SMALL, "documents").selectExpr(
-        "cast(doc_id as string) AS source", "text",
-        "cast(null as string) AS error",
-    )
-    write_chunk_table(build_chunk_rows(docs), table)
+    _write_served_table(spark, table)
 
     idx = open_serving_index(spark, table)
     try:
@@ -95,6 +87,94 @@ def test_serving_index_parity_and_invalidation(spark, tmp_path):
     # the re-warm sees the upserted partition
     assert api._serving.filter("source = 'fresh'").count() > 0
     api._invalidate()
+
+
+def test_score_chunks_raw_is_the_vector_fold_bit_for_bit(spark):
+    """score_chunks' one SQL scoring expression must equal
+    functions/vector.py's ``dot(pattern, q) / (l2_norm(pattern) *
+    qnorm)`` bit for bit. Parity compares scores rounded to 6 decimals
+    only, so this pins the raw doubles the top-k tie order cuts on."""
+    from pyspark.sql import functions as F
+
+    from articulation_vector_db_api_spark.functions.vector import dot, l2_norm
+    from articulation_vector_db_api_spark.operators.search import (
+        PATTERN_DIM, chunk_patterns, query_vector_literals, score_chunks,
+    )
+
+    for query in ("transfer credits", "customer data"):
+        qv, qnorm = query_vector_literals(query, PATTERN_DIM)
+        qvec = F.array(*[F.lit(v) for v in qv])
+        want = chunk_patterns(spark, SF_SMALL).select(
+            "id",
+            (dot(F.col("pattern"), qvec)
+             / (l2_norm(F.col("pattern")) * F.lit(qnorm))).alias("raw"),
+        )
+        got = score_chunks(spark, SF_SMALL, query).select("id", "raw")
+        a = {r.id: r.raw.hex() for r in got.collect()}
+        b = {r.id: r.raw.hex() for r in want.collect()}
+        assert a == b and len(a) > 0
+
+
+def _write_served_table(spark, table: str) -> None:
+    from articulation_vector_db_api_spark.operators.ingest import (
+        build_chunk_rows, write_chunk_table,
+    )
+    from articulation_vector_db_api_spark.sources.readers import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents").selectExpr(
+        "cast(doc_id as string) AS source", "text",
+        "cast(null as string) AS error",
+    )
+    write_chunk_table(build_chunk_rows(docs), table)
+
+
+def test_remote_serving_table_keeps_scan_partitioning(
+    spark, tmp_path, monkeypatch
+):
+    """open_serving_index on a table the local file system cannot size
+    (``s3a://``) must keep the scan's own partitioning: os.walk of a URI
+    yields nothing, which must not read as a 0-byte table and collapse
+    the cached index into one partition. A local table is still sized
+    (and coalesced) by its bytes."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from articulation_vector_db_api_spark.operators.search import (
+        open_serving_index, topk_search_cached, topk_search_indexed,
+    )
+
+    table = str(tmp_path / "chunks")
+    _write_served_table(spark, table)
+    remote = "s3a://bucket/chunks"
+    real_parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet",
+        lambda self, *paths, **kw: real_parquet(
+            self, *[table if p == remote else p for p in paths], **kw
+        ),
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "64k")  # several scan splits from a small table
+    try:
+        scan_parts = spark.read.parquet(table).rdd.getNumPartitions()
+        assert scan_parts > 1
+        idx = open_serving_index(spark, remote)
+        local = open_serving_index(spark, table)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    try:
+        assert idx.rdd.getNumPartitions() == scan_parts
+        assert local.rdd.getNumPartitions() == 1  # < 64 MB of parquet
+        want = [tuple(r) for r in
+                topk_search_indexed(spark, table, "transfer credits", 5).collect()]
+        assert [tuple(r) for r in
+                topk_search_cached(idx, "transfer credits", 5).collect()] == want
+    finally:
+        idx.unpersist()
+        local.unpersist()
 
 
 def test_mmr_arbitrary_k(spark):

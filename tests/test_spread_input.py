@@ -49,6 +49,23 @@ def test_remote_table_is_not_shuffled(spark):
     assert out is df
 
 
+def test_local_path_bytes_is_unknown_for_remote_and_not_memoized(tmp_path):
+    """The shared size probe: None (unknown) for a non-local URI, the
+    data bytes of a local tree (sidecars skipped; ``file:`` URIs are
+    local), and a fresh walk per call — a served table grows."""
+    assert readers.local_path_bytes("s3a://bucket/chunks") is None
+    assert readers.local_path_bytes("hdfs://nn/chunks") is None
+    d = tmp_path / "t"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"x" * 10)
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / ".part-0.parquet.crc").write_bytes(b"yy")
+    assert readers.local_path_bytes(str(d)) == 10
+    assert readers.local_path_bytes(f"file://{d}") == 10
+    (d / "part-1.parquet").write_bytes(b"x" * 5)
+    assert readers.local_path_bytes(str(d)) == 15
+
+
 def test_threshold_uses_session_max_partition_bytes(spark):
     """The decision tracks spark.sql.files.maxPartitionBytes, not a
     constant: raising the split size raises the spread threshold."""

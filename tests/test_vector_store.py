@@ -105,8 +105,8 @@ def test_incremental_append_then_probe_and_compact(spark, tmp_path):
 
     grown = str(tmp_path / "grown")
     train_ivf_router(e, grown, N_CELLS)  # router from the full corpus
-    append_ivf_store(half_a, grown, N_CELLS)
-    append_ivf_store(half_b, grown, N_CELLS)
+    append_ivf_store(half_a, grown)
+    append_ivf_store(half_b, grown)
     full = str(tmp_path / "full")
     write_ivf_store(e, full, N_CELLS)
 
@@ -168,7 +168,7 @@ def test_streaming_foreachbatch_index_maintenance(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            lambda batch, _bid: append_ivf_store(batch, store, N_CELLS)
+            lambda batch, _bid: append_ivf_store(batch, store)
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -220,7 +220,7 @@ def test_delete_tombstone_then_purge(spark, tmp_path):
     assert not {int(r[0]) for r in after} & set(victims)
     assert after[:8] == before[2:]  # ranks 3..10 slide up
 
-    cells = purge_ivf_tombstones(spark, store, N_CELLS)
+    cells = purge_ivf_tombstones(spark, store)
     assert cells == sorted({v % N_CELLS for v in victims})
     assert not os.path.exists(os.path.join(store, "tombstones"))
     purged = [
@@ -234,7 +234,7 @@ def test_delete_tombstone_then_purge(spark, tmp_path):
     ).count()
     assert remaining == 0
     # purge with nothing pending is a no-op
-    assert purge_ivf_tombstones(spark, store, N_CELLS) == []
+    assert purge_ivf_tombstones(spark, store) == []
 
 
 def test_upsert_replaces_vectors_last_write_wins(spark, tmp_path):
@@ -265,7 +265,7 @@ def test_upsert_replaces_vectors_last_write_wins(spark, tmp_path):
         [(winner, qvec), (loser, [-x for x in qvec])],
         "vec_id long, embedding array<double>",
     )
-    upsert_ivf_store(spark, repl, store, N_CELLS)
+    upsert_ivf_store(spark, repl, store)
 
     vecs = spark.read.parquet(current_vectors_dir(store))
     assert vecs.count() == total  # replaced, not duplicated
@@ -303,7 +303,7 @@ def test_purge_drops_fully_tombstoned_cell(spark, tmp_path):
     ]
     assert victims  # fixture covers every cell
     delete_from_ivf_store(spark, store, victims)
-    cells = purge_ivf_tombstones(spark, store, N_CELLS)
+    cells = purge_ivf_tombstones(spark, store)
     assert cells == [victim_cell]
     # the cell directory itself is gone — not just logically hidden
     assert not os.path.exists(
@@ -338,7 +338,7 @@ def test_upsert_collapses_intra_batch_duplicates(spark, tmp_path):
         [(target, [-x for x in qvec]), (target, qvec)],
         "vec_id long, embedding array<double>",
     ).coalesce(1)
-    upsert_ivf_store(spark, dup, store, N_CELLS)
+    upsert_ivf_store(spark, dup, store)
 
     vecs = spark.read.parquet(current_vectors_dir(store))
     assert vecs.count() == total  # one row survived, not two
@@ -386,7 +386,7 @@ def test_concurrent_upserts_serialize_no_duplicates(spark, tmp_path):
 
     def run(lo, hi, tag):
         try:
-            upsert_ivf_store(spark, batch(lo, hi, tag), store, N_CELLS)
+            upsert_ivf_store(spark, batch(lo, hi, tag), store)
         except Exception as exc:  # noqa: BLE001 - surface in main thread
             errs.append(exc)
 
@@ -453,7 +453,7 @@ def test_reader_pinned_before_purge_survives_rewrite(spark, tmp_path):
 
     victim = 9
     delete_from_ivf_store(spark, store, [victim])
-    purged = purge_ivf_tombstones(spark, store, N_CELLS)
+    purged = purge_ivf_tombstones(spark, store)
     assert purged == [victim % N_CELLS]
     assert _current_version(store) == 1
 
@@ -498,14 +498,12 @@ def test_reader_pinned_before_purge_survives_rewrite(spark, tmp_path):
     assert versions == {"v1", "v2"}
 
 
-def test_mismatched_n_cells_rejected_not_resurrecting(spark, tmp_path):
+def test_purge_routes_with_pinned_n_cells_not_resurrecting(spark, tmp_path):
     """The review-found resurrection path: purging with a different
     modulus than the store's would rewrite the WRONG cells and then
     clear the tombstones, silently resurrecting the 'deleted' rows.
-    n_cells is now pinned in store_meta.json — a mismatched explicit
-    value raises, an omitted one resolves to the pinned value."""
-    import pytest as _pytest
-
+    n_cells is pinned in store_meta.json and no mutator takes it as an
+    argument, so the purge routes with the store's own value."""
     from articulation_vector_db_api_spark.operators.vector_store import (
         delete_from_ivf_store,
         purge_ivf_tombstones,
@@ -516,9 +514,6 @@ def test_mismatched_n_cells_rejected_not_resurrecting(spark, tmp_path):
     write_ivf_store(e.filter(F.col("vec_id") < 32), store, 16)
 
     delete_from_ivf_store(spark, store, [9])
-    with _pytest.raises(ValueError, match="pinned"):
-        purge_ivf_tombstones(spark, store, 8)  # wrong modulus
-    # omitted → pinned value; the right cell is purged
     assert purge_ivf_tombstones(spark, store) == [9 % 16]
     ids = {
         int(r.vec_id)
@@ -527,6 +522,36 @@ def test_mismatched_n_cells_rejected_not_resurrecting(spark, tmp_path):
         .collect()
     }
     assert 9 not in ids and len(ids) == 31
+
+
+def test_rebuild_starts_a_fresh_store(spark, tmp_path):
+    """write_ivf_store over an existing store starts a fresh one: version
+    history back at v0 and no tombstones left over from the old vectors
+    (they would hide the rebuilt rows that reuse those ids)."""
+    from articulation_vector_db_api_spark.operators.vector_store import (
+        _current_version,
+        delete_from_ivf_store,
+        purge_ivf_tombstones,
+    )
+
+    e = load_table(spark, SF, "embeddings").filter(F.col("vec_id") < 32)
+    store = str(tmp_path / "ivf_rebuilt")
+    write_ivf_store(e, store, N_CELLS)
+    delete_from_ivf_store(spark, store, [4])
+    purge_ivf_tombstones(spark, store)
+    delete_from_ivf_store(spark, store, [5])
+    assert _current_version(store) == 1
+
+    write_ivf_store(e, store, N_CELLS)
+    assert _current_version(store) == 0
+    assert not os.path.exists(os.path.join(store, "tombstones"))
+    for vid in (4, 5):
+        qvec = [
+            float(x) for x in
+            e.filter(F.col("vec_id") == vid).select("embedding").first()[0]
+        ]
+        hits = probe_ivf_store(spark, store, qvec, nprobe=N_CELLS, k=3)
+        assert vid in {int(r.vec_id) for r in hits.collect()}
 
 
 def test_purge_recovers_from_crashed_prior_attempt(spark, tmp_path):
@@ -604,8 +629,8 @@ def test_maintenance_never_materializes_ids_on_driver(spark, tmp_path):
 
     DataFrame.collect = spying_collect
     try:
-        upsert_ivf_store(spark, repl, store, N_CELLS)
-        purge_ivf_tombstones(spark, store, N_CELLS)
+        upsert_ivf_store(spark, repl, store)
+        purge_ivf_tombstones(spark, store)
     finally:
         DataFrame.collect = real_collect
 
@@ -655,7 +680,7 @@ def test_upsert_folds_outstanding_tombstones_one_version(spark, tmp_path):
         [(3, [1.0] * 4), (21, [2.0] * 4)],
         "vec_id long, embedding array<double>",
     )
-    upsert_ivf_store(spark, repl, store, N_CELLS)
+    upsert_ivf_store(spark, repl, store)
 
     assert _current_version(store) == v_before + 1  # one bump, not two
     assert not os.path.isdir(os.path.join(store, "tombstones"))
@@ -721,7 +746,7 @@ def test_upsert_recovers_from_crashed_prior_attempt(spark, tmp_path):
     repl = spark.createDataFrame(
         [(int(before[1][0]), qvec)], "vec_id long, embedding array<double>"
     )
-    upsert_ivf_store(spark, repl, store, N_CELLS)
+    upsert_ivf_store(spark, repl, store)
     assert _current_version(store) == 1
     after = {
         int(r.vec_id): r.score
@@ -788,7 +813,6 @@ def test_store_matches_dict_model_under_op_sequences(spark, tmp_path, seed):
                     rows, "vec_id long, embedding array<double>"
                 ),
                 store,
-                N_CELLS,
             )
             model.update({i: v for i, v in rows})
         elif op == "delete":
@@ -797,7 +821,7 @@ def test_store_matches_dict_model_under_op_sequences(spark, tmp_path, seed):
             for i in chosen:
                 model.pop(i, None)
         elif op == "purge":
-            purge_ivf_tombstones(spark, store, N_CELLS)
+            purge_ivf_tombstones(spark, store)
         else:
             compact_ivf_cells(spark, store, max_files_per_cell=2)
         assert visible() == model, f"seed={seed} diverged after step {step} ({op})"
